@@ -302,7 +302,10 @@ def _bound_record(out: dict) -> dict:
     RECORD_BYTE_BUDGET: first the full record is dumped to
     _scratch/bench_diag_last.json (side artifact, never graded), then
     stress shot_diag shrinks to the noisy queries, then shot_diag and
-    layout drop entirely. Graded keys — value, queries, shots,
+    layout drop entirely, then the non-graded medians and rows-per-sec
+    maps (the summary already carries the two tracked medians). A
+    record still over budget after that is reported on stderr rather
+    than silently emitted. Graded keys — value, queries, shots,
     summary (still the LAST key) — are never touched."""
     if len(json.dumps(out)) <= RECORD_BYTE_BUDGET:
         return out
@@ -328,6 +331,17 @@ def _bound_record(out: dict) -> dict:
     ):
         stress.pop("shot_diag", None)
         stress.pop("layout", None)
+    if len(json.dumps(out)) > RECORD_BYTE_BUDGET and isinstance(
+        stress, dict
+    ):
+        stress.pop("medians", None)
+        stress.pop("output_rows_per_sec", None)
+    if (size := len(json.dumps(out))) > RECORD_BYTE_BUDGET:
+        print(
+            f"WARNING: bench record is {size} bytes, over the "
+            f"{RECORD_BYTE_BUDGET}-byte budget after pruning",
+            file=sys.stderr,
+        )
     return out
 
 

@@ -214,8 +214,8 @@ def asof_join_events_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # registry's query wrapper at the next call) closes it — the
     # consumer's collect builds the cache and reads it from both
     # sides, then the boundary flush unpersists. Zero documented
-    # retentions remain (runtime_sweep KNOWN_RETAINED_CACHES is
-    # empty; tests/test_materialize_tier.py pins the lifecycle).
+    # retentions remain (tools/run_gates.py flags every retained
+    # cache; tests/test_materialize_tier.py pins the lifecycle).
     from hdsp_hive_release_src_spark.operators.materialize import (
         defer_release,
         persist_fact_rows,

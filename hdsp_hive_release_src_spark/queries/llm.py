@@ -81,6 +81,12 @@ _DUCK_SHINGLES = """
 # SAME cap so parity holds by construction at any scale.
 MAX_SHINGLE_DF = 1000
 
+# The near-duplicate Jaccard threshold. The engine's size prefilter
+# (``min_jaccard``), its output filter and the oracle all read this one
+# value: a one-sided edit would let the prefilter drop pairs above a
+# lowered output threshold.
+JACCARD_THRESHOLD = 0.5
+
 # CTE mirroring the cap oracle-side; compose after _DUCK_SHINGLES.
 _DUCK_SH_CAPPED = f"""
     shc AS (
@@ -100,7 +106,7 @@ _JACCARD_PAIRS_SQL = f"""
     SELECT d1, d2,
            round(inter * 1.0 / (s1.n + s2.n - inter), 6) AS jaccard
     FROM pairs JOIN sz s1 ON d1 = s1.doc_id JOIN sz s2 ON d2 = s2.doc_id
-    WHERE inter * 1.0 / (s1.n + s2.n - inter) >= 0.5
+    WHERE inter * 1.0 / (s1.n + s2.n - inter) >= {JACCARD_THRESHOLD}
     ORDER BY d1, d2
 """
 
@@ -319,17 +325,19 @@ def jaccard_pairs_from_docs(
     postings array in one in-memory agg buffer first), so per-group
     agg memory really is ≤ max_shingle_df structs at any corpus size.
 
-    r17 (guide §2.3): passes ``min_jaccard=0.5`` so the size filter
-    (min(n1,n2) ≥ 0.5·max — a necessary condition for J ≥ 0.5, see
-    shingle_pair_counts) drops ~24% of candidate incidences before
-    the pair aggregation, and the aggregation itself groups on
-    (d1, d2) alone. Interleaved A/B at the 10× replica (noop sink,
-    4 reps): 2.68/3.47 s best/worst → 2.30/3.20 s, output
-    byte-identical (2560 pairs).
+    r17 (guide §2.3): passes ``min_jaccard=JACCARD_THRESHOLD`` so the
+    size filter (min(n1,n2) ≥ 0.5·max — a necessary condition for
+    J ≥ 0.5, see shingle_pair_counts) drops ~24% of candidate
+    incidences before the pair aggregation, and the aggregation
+    itself groups on (d1, d2) alone. Interleaved A/B at the 10×
+    replica (noop sink, 4 reps): 2.68/3.47 s best/worst →
+    2.30/3.20 s, output byte-identical (2560 pairs).
     """
-    pairs = shingle_pair_counts(d, max_shingle_df, min_jaccard=0.5)
+    pairs = shingle_pair_counts(
+        d, max_shingle_df, min_jaccard=JACCARD_THRESHOLD
+    )
     jac = F.col("inter") / (F.col("n1") + F.col("n2") - F.col("inter"))
-    out = pairs.where(jac >= 0.5).select(
+    out = pairs.where(jac >= JACCARD_THRESHOLD).select(
         "d1", "d2", F.round(jac, 6).alias("jaccard")
     )
     # sort_output=False is the order-insensitive-consumer form (see
@@ -409,7 +417,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("inter")
             / (F.size("sh1") + F.size("sh2") - F.col("inter")),
         )
-        .where(F.col("jac") >= 0.5)
+        .where(F.col("jac") >= JACCARD_THRESHOLD)
     )
     return verified.select(
         "d1", "d2", F.round("jac", 6).alias("jaccard")

@@ -464,7 +464,7 @@ def abc_pareto_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     # as a proven reduced materialization and keeps the checkpoint
     # tier (a raw checkpoint is unverifiable and would route the
     # operator's input materialization to a retained DISK_ONLY
-    # persist — caught by runtime_sweep's r15 cache-hygiene check).
+    # persist — caught by the gates' r15 cache-hygiene check).
     from hdsp_hive_release_src_spark.operators.materialize import (
         checkpoint_reduced,
     )

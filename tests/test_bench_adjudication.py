@@ -299,7 +299,7 @@ class TestCodeCacheMitigation:
     """r15: the stress slow mode (intermittent 10x-CPU shots on
     unchanged code, r12-r14) was A/B-confirmed as JVM code-cache
     exhaustion — a 64m cache reproduced a 43.7 s / 844-CPU-s jaccard
-    shot that a 512m cache eliminated (tools/cc_ab_probe.py, SURVEY
+    shot that a 512m cache eliminated (A/B probe recorded in SURVEY
     §6). These pins keep the mitigation and its diagnostics wired."""
 
     def test_get_spark_reserves_512m_code_cache(self, spark):
@@ -527,6 +527,31 @@ class TestRecordByteBudget:
         # second stage removes shot_diag wholesale — either way the
         # un-flagged query's bulk diag is gone
         assert "q2" not in out["stress_10x"].get("shot_diag", {})
+
+    def test_last_stage_drops_medians_then_warns(self, capsys):
+        """Past shot_diag/layout, the non-graded medians and
+        rows-per-sec maps go; a record whose GRADED keys alone exceed
+        the budget is not cut further but reported on stderr."""
+        import json
+
+        from bench import RECORD_BYTE_BUDGET, _bound_record
+
+        rec = self._fat_record()
+        many = {f"q{i}_{'x' * 40}": 1.0 for i in range(1000)}
+        rec["stress_10x"]["medians"] = dict(many)
+        rec["stress_10x"]["output_rows_per_sec"] = dict(many)
+        out = _bound_record(rec)
+        assert "medians" not in out["stress_10x"]
+        assert "output_rows_per_sec" not in out["stress_10x"]
+        assert len(json.dumps(out)) <= RECORD_BYTE_BUDGET
+        assert "WARNING" not in capsys.readouterr().err
+
+        rec = self._fat_record()
+        rec["queries"] = dict(many)
+        rec["shots"] = {q: [1.0, 1.0] for q in many}
+        out = _bound_record(rec)
+        assert out["queries"] == many and list(out)[-1] == "summary"
+        assert "over the 60000-byte budget" in capsys.readouterr().err
 
 
 class TestStressNoopTier:

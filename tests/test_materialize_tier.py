@@ -343,8 +343,8 @@ class TestQueryCacheRelease:
     # projection) defer their release to the query-boundary flush the
     # registry wrapper runs at the next call (r16, r15 verdict
     # item 5). There are NO documented retentions left registry-wide
-    # (runtime_sweep.KNOWN_RETAINED_CACHES is empty and the sweep
-    # checks all 494 names each round).
+    # (tools/run_gates.py flags any retained cache and checks all
+    # 494 names each round).
     RELEASING = [
         "conformal_prediction_interval",
         "rake_keyword_phrases",
@@ -365,7 +365,7 @@ class TestQueryCacheRelease:
         "gini_concentration_index",
         # r15: fed a RAW localCheckpoint into range_prefix_sum, which
         # the verified classifier refuses — caught as a retained
-        # DISK_ONLY persist by runtime_sweep's cache-hygiene check;
+        # DISK_ONLY persist by the gates' cache-hygiene check;
         # fixed via checkpoint_reduced (round9m.py)
         "abc_pareto_class",
         # r16: the former single documented retention — its

@@ -106,3 +106,21 @@ def test_no_float_image_rounds():
         f"round-over-double-image-of-decimal-sum sites found: {hits} "
         f"— round the exact decimal first, then cast (q9 convention)"
     )
+
+
+def test_float_image_scan_covers_engine_sources(tmp_path):
+    """The convention binds the implementation as well as the oracle: a
+    compliant oracle does not make an engine-side
+    F.round(F.sum(<decimal>).cast("double"), k) safe. A planted site in
+    a scanned source directory must be reported; the safe spellings
+    (round the exact sum, then cast; integer sums) must not."""
+    from tools.audit_rounding import float_image_rounds
+
+    (tmp_path / "planted.py").write_text(
+        'a = F.round(F.sum("rev").cast("double"), 2)\n'
+        'b = F.round(F.sum("rev"), 2).cast("double")\n'
+        'c = F.round(F.sum(F.col("n").cast("bigint")).cast("double"), 2)\n'
+    )
+    assert float_image_rounds(tmp_path) == {
+        f"{tmp_path.name}/planted.py": ['f.sum("rev").cast("double")']
+    }

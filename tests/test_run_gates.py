@@ -1,10 +1,10 @@
-"""Pin the gate-runner's cheap logic (tools/run_gates.py).
+"""Pin the gate runner's record (tools/run_gates.py → tools/GATES.json).
 
-The six-gate run itself is a round-start activity (~35-60 min); these
-tests pin what must not drift silently between rounds: the pinned
-scan-sweep baseline staying in sync with the committed artifact, and
-the stdout parse / gate criteria that turn tool output into the
-go/no-go record.
+The full gate run is a round-start activity; these tests pin what must
+not drift silently between runs: the pinned scan baseline staying in
+sync with the committed record, the both-directions scan criterion,
+and the zero-actionable verdicts of the other plan and execution
+gates.
 """
 
 from __future__ import annotations
@@ -19,17 +19,19 @@ sys.path.insert(0, str(REPO / "tools"))
 from run_gates import KNOWN_SCAN_FLAGGED  # noqa: E402
 
 
+def _gates() -> dict:
+    return json.loads((REPO / "tools" / "GATES.json").read_text())["gates"]
+
+
 class TestScanBaseline:
     def test_pin_matches_committed_artifact(self):
-        """The runner's 9-name pin and the newest committed
-        SCAN_SWEEP artifact must name the same set — updating one
-        without the other would make the gate lie in one direction."""
-        newest = max(
-            REPO.glob("tools/SCAN_SWEEP_r*.json"),
-            key=lambda p: int("".join(c for c in p.stem if c.isdigit())),
-        )
-        artifact = json.loads(newest.read_text())
-        assert set(artifact["flagged"]) == KNOWN_SCAN_FLAGGED
+        """The runner's 9-name pin and the committed record must name
+        the same set — updating one without the other would make the
+        gate lie in one direction."""
+        scan = _gates()["scan"]
+        assert set(scan["flagged"]) == KNOWN_SCAN_FLAGGED
+        assert scan["ok"] and not scan["new_vs_pin"]
+        assert not scan["gone_vs_pin"]
 
     def test_both_directions_gate(self):
         """A NEW flagged name and a DISAPPEARED pinned name both fail
@@ -50,23 +52,15 @@ class TestScanBaseline:
 
 class TestArtifactCriteria:
     def test_runtime_sweep_criterion_matches_artifact_shape(self):
-        """The runtime gate keys (n_actionable /
-        n_retained_cache_actionable / errors) must exist in the real
-        committed artifact — a key rename would make the lambda
-        KeyError into ok=False noise instead of evaluating."""
-        artifact = json.loads(
-            (REPO / "tools" / "RUNTIME_SWEEP_r16.json").read_text()
-        )
-        assert artifact["n_actionable"] == 0
-        assert artifact["n_retained_cache_actionable"] == 0
-        assert not artifact["errors"]  # empty dict of name -> error
+        """The execution gate's counters exist in the committed record
+        and are all zero: no actionable executed-scan amplification, no
+        DISK_ONLY persist surviving a query, no query error."""
+        runtime = _gates()["runtime"]
+        assert runtime["n_actionable"] == 0
+        assert runtime["n_retained_cache_actionable"] == 0
+        assert not runtime["errors"]  # empty dict of name -> error
 
     def test_subtree_and_bnlj_criteria_match_artifact_shape(self):
-        sub = json.loads(
-            (REPO / "tools" / "SUBTREE_SWEEP_r16.json").read_text()
-        )
-        bnlj = json.loads(
-            (REPO / "tools" / "BNLJ_AUDIT_r16.json").read_text()
-        )
-        assert sub["n_flagged"] == 0
-        assert bnlj["n_actionable"] == 0
+        gates = _gates()
+        assert gates["subtree"]["n_flagged"] == 0
+        assert gates["bnlj"]["n_actionable"] == 0

@@ -1,60 +1,25 @@
-"""Pin the sixth standing gate's plumbing (tools/scale_parity_sweep.py).
+"""Pin the parity gate's verdicts (tools/check_oracle.check).
 
-The sweep itself (full registry at sf0.1, ~30 min) runs once per round
-as a gate; these tests pin the cheap parts that must not drift — the
-stdout parse feeding the artifact, and the round auto-detection that
-names it — so a parse regression can't silently turn a FAIL into an
-empty names_fail list.
+The full-registry parity gate runs at sf0.1 inside tools/run_gates.py
+and reads these verdicts directly. This test keeps the guarantee that
+a FAIL cannot vanish on its way to the record: a correct oracle gives
+PASS, and a deliberately wrong one gives FAIL.
 """
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
+def test_check_verdicts_pass_and_fail(spark, sf_dir, monkeypatch):
+    from hdsp_hive_release_src_spark import registry
+    from tools.check_oracle import check
 
-from scale_parity_sweep import _default_round, parse_check_oracle  # noqa: E402
-
-
-class TestParse:
-    def test_pass_fail_rows_only_split(self):
-        out = "\n".join(
-            [
-                "PASS q1_pricing_summary: 6 rows [0.9s]",
-                "FAIL dsir_importance_weights: value mismatch, first "
-                "diffs: [('a', 'b')]",
-                "rows custom_stateful_thing: 12 rows (rows-only check) "
-                "[0.3s]",
-                "PASS q3_shipping_priority: 10 rows [0.5s]",
-                "",
-                "2 pass, 1 fail, 1 rows-only",
-            ]
-        )
-        p, f, r, fl = parse_check_oracle(out)
-        assert p == ["q1_pricing_summary", "q3_shipping_priority"]
-        assert f == ["dsir_importance_weights"]
-        assert r == ["custom_stateful_thing"]
-        assert fl and fl[0].startswith("FAIL dsir_importance_weights")
-
-    def test_repeated_fail_name_deduped(self):
-        out = "FAIL x: spark error: boom\nFAIL x: rowcount spark=1 duck=2"
-        p, f, r, fl = parse_check_oracle(out)
-        assert f == ["x"]
-        assert len(fl) == 1
-
-    def test_summary_and_progress_lines_ignored(self):
-        out = "# warming up\n494 pass, 0 fail, 0 rows-only"
-        assert parse_check_oracle(out) == ([], [], [], [])
-
-    def test_fail_line_truncated_to_500(self):
-        out = "FAIL y: " + "z" * 1000
-        _, f, _, fl = parse_check_oracle(out)
-        assert f == ["y"] and len(fl[0]) == 500
-
-
-class TestRoundDetection:
-    def test_round_is_newest_correctness_plus_one(self):
-        # the repo root has CORRECTNESS_r01..r15 committed; the round
-        # being built is therefore 16 (or later as future rounds land)
-        assert int(_default_round()) >= 16
+    registry.load_all()
+    name = "q6_revenue_forecast"
+    assert check(spark, sf_dir, [name])[name][0] == "PASS"
+    monkeypatch.setitem(
+        registry.ORACLES,
+        name,
+        f"SELECT revenue + 1 AS revenue FROM ({registry.ORACLES[name]})",
+    )
+    status, detail = check(spark, sf_dir, [name])[name]
+    assert status == "FAIL" and detail.startswith("value mismatch")

@@ -181,7 +181,7 @@ EXPECTED_CORPUS = {
 
 
 # Iterative / multi-consumer queries fixed by the r12 full-registry
-# scan sweep (tools/scan_sweep.py): each re-ran its fact scan 6-94x at
+# scan sweep (now tools/run_gates.py): each re-ran its fact scan 6-94x at
 # runtime before its derived base table was checkpointed. Their FINAL
 # plans must now contain ZERO parquet fact scans — everything reads
 # the checkpoint; the one real scan happens at build.

@@ -1,4 +1,5 @@
-"""Pin the r13 subtree-re-execution discipline (tools/subtree_sweep.py).
+"""Pin the r13 subtree-re-execution discipline (the subtree predicate
+of tools/run_gates.py).
 
 The full-registry sweep runs as a round-start gate; this test keeps the
 defect class from silently returning between rounds by re-checking the
@@ -26,7 +27,8 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
 
-from subtree_sweep import _details, _fingerprint, _flag, _parse, _tree_lines  # noqa: E402
+import run_gates  # noqa: E402
+from run_gates import subtree_hits  # noqa: E402
 
 WORST_OFFENDERS = [
     "shortest_path_bfs",
@@ -48,40 +50,36 @@ def test_no_repeated_expensive_subtrees(spark, sf_dir, name):
     from hdsp_hive_release_src_spark.plans import explain_str
 
     registry.load_all()
-    plan = explain_str(registry.QUERIES[name](spark, sf_dir))
-    root = _parse(_tree_lines(plan), _details(plan))
-    assert root is not None
-    _fingerprint(root)
-    hits = _flag(root)
+    hits = subtree_hits(explain_str(registry.QUERIES[name](spark, sf_dir)))
     assert hits == [], (
         f"{name} re-executes a join/aggregate subtree again: {hits} — "
-        "a fixed r13 defect regressed (see tools/subtree_sweep.py)"
+        "a fixed r13 defect regressed (see tools/run_gates.py)"
     )
 
 
-def test_tool_import_does_not_mutate_keep_plan_env():
-    """r15 regression pin: the plan-only sweep tools set
-    SPARK_GRAFT_KEEP_PLAN inside main(), NEVER at import — this test
-    module imports subtree_sweep at collection time, and an
-    import-time env mutation would silently bypass the checkpoint
-    discipline for the entire test process (caught as a full-suite
-    failure of the ranking cache-release pins in r15)."""
+def test_tool_import_does_not_mutate_keep_plan_env(spark, sf_dir):
+    """r15 regression pin: the gate runner sets SPARK_GRAFT_KEEP_PLAN
+    only for its plan pass, NEVER at import, and restores it after —
+    this test module imports run_gates at collection time, and a leaked
+    bypass would silently skip the checkpoint discipline for the
+    entire test process (caught as a full-suite failure of the ranking
+    cache-release pins in r15)."""
     import importlib
     import os
 
-    saved = os.environ.pop("SPARK_GRAFT_KEEP_PLAN", None)
+    saved = os.environ.pop(run_gates.KEEP_PLAN, None)
     try:
-        import bnlj_audit
-        import scan_sweep
-        import subtree_sweep
-
-        importlib.reload(subtree_sweep)
-        importlib.reload(bnlj_audit)
-        importlib.reload(scan_sweep)
-        assert "SPARK_GRAFT_KEEP_PLAN" not in os.environ
+        importlib.reload(run_gates)
+        assert run_gates.KEEP_PLAN not in os.environ
+        run_gates.plan_pass(spark, sf_dir, ["q6_revenue_forecast"])
+        assert run_gates.KEEP_PLAN not in os.environ
+        os.environ[run_gates.KEEP_PLAN] = "0"
+        run_gates.plan_pass(spark, sf_dir, ["q6_revenue_forecast"])
+        assert os.environ[run_gates.KEEP_PLAN] == "0"
     finally:
+        os.environ.pop(run_gates.KEEP_PLAN, None)
         if saved is not None:
-            os.environ["SPARK_GRAFT_KEEP_PLAN"] = saved
+            os.environ[run_gates.KEEP_PLAN] = saved
 
 
 def test_cache_read_repeats_are_opaque_but_joins_above_still_flag():
@@ -91,11 +89,6 @@ def test_cache_read_repeats_are_opaque_but_joins_above_still_flag():
     false-flagged as 'expensive' when the printed build plan held a
     join — first hit by the r17 persist-tier materializations). A
     repeated join ABOVE the cache leaves must still flag."""
-
-    def tree(plan: str):
-        root = _parse(_tree_lines(plan), _details(plan))
-        _fingerprint(root)
-        return _flag(root)
 
     # two identical Sort->Exchange chains over a cache whose printed
     # build plan contains a join: must NOT flag
@@ -117,7 +110,7 @@ Union (9)
                      +- Scan parquet (7)
 
 """
-    assert tree(benign) == []
+    assert subtree_hits(benign) == []
     # two identical joins OF cache reads: the join sits above the
     # truncation point and must flag
     guilty = """== Physical Plan ==
@@ -132,5 +125,36 @@ Union (9)
       +- InMemoryTableScan (2)
 
 """
-    hits = tree(guilty)
+    hits = subtree_hits(guilty)
     assert hits and hits[0]["occurrences"] == 2
+
+
+def test_reads_of_different_caches_are_not_one_subtree():
+    """Two structurally identical expensive chains over DIFFERENT caches
+    are two computations, not one re-executed twice: the opaque cache
+    leaf keeps its own detail in the fingerprint."""
+    plan = """== Physical Plan ==
+Union (9)
+:- HashAggregate (5)
+:  +- SortMergeJoin Inner (4)
+:     :- InMemoryTableScan (1)
+:     +- InMemoryTableScan (2)
++- HashAggregate (8)
+   +- SortMergeJoin Inner (7)
+      :- InMemoryTableScan (3)
+      +- InMemoryTableScan (6)
+
+(1) InMemoryTableScan
+Output [1]: [a#1L]
+
+(2) InMemoryTableScan
+Output [1]: [b#2L]
+
+(3) InMemoryTableScan
+Output [1]: [c#3L]
+
+(6) InMemoryTableScan
+Output [1]: [d#4L]
+
+"""
+    assert subtree_hits(plan) == []

@@ -169,25 +169,43 @@ def verify_grid_cols(sf_dir: str) -> None:
 # exempt; divisions/products are the standing float-class (order
 # fuzz), not this pattern.
 _FLOAT_IMAGE_RE = re.compile(
-    r"^cast\s*\(\s*sum\s*\(.*\)\s*as\s+double\s*\)$", re.DOTALL
+    r"^cast\s*\(\s*sum\s*\(.*\)\s*as\s+double\s*\)$"
+    # the DataFrame-API spelling: F.round(F.sum(...).cast("double"), k)
+    r"|^f\.sum\s*\(.*\)\s*\.cast\s*\(\s*"
+    r"(?:[\"']double[\"']|doubletype\s*\(\s*\))\s*\)$",
+    re.DOTALL,
 )
+QUERIES_DIR = REPO / "hdsp_hive_release_src_spark" / "queries"
 
 
-def float_image_rounds() -> dict[str, list[str]]:
+def _float_image_sites(text: str) -> list[str]:
+    out = []
+    for site in round_sites(text):
+        # strip the rounding-digits argument (top-level ", k")
+        expr = re.sub(r",\s*\d+\s*$", "", site)
+        low = " ".join(expr.lower().split())
+        # an integer sum is exact under the double cast
+        int_sum = re.search(r"as\s+(big)?int|cast\(\s*[\"'](big)?int", low)
+        if _FLOAT_IMAGE_RE.match(low) and not int_sum:
+            out.append(low[:160])
+    return out
+
+
+def float_image_rounds(src_dir: Path = QUERIES_DIR) -> dict[str, list[str]]:
+    """Float-image round sites in every oracle (keyed by query name)
+    AND in the engine sources under ``src_dir`` (keyed by file): a
+    compliant oracle does not make a non-compliant implementation
+    safe — either side alone diverges at a half-boundary."""
     from hdsp_hive_release_src_spark import registry
 
     registry.load_all()
     hits: dict[str, list[str]] = {}
     for name, sql in registry.ORACLES.items():
-        for site in round_sites(sql):
-            # strip the rounding-digits argument (top-level ", k")
-            expr = re.sub(r",\s*\d+\s*$", "", site)
-            low = " ".join(expr.lower().split())
-            if not _FLOAT_IMAGE_RE.match(low):
-                continue
-            if re.search(r"as\s+(big)?int", low):
-                continue  # integer sum — exact under the double cast
-            hits.setdefault(name, []).append(low[:160])
+        if sites := _float_image_sites(sql):
+            hits[name] = sites
+    for path in sorted(src_dir.glob("*.py")):
+        if sites := _float_image_sites(path.read_text()):
+            hits[f"{src_dir.name}/{path.name}"] = sites
     return hits
 
 
@@ -258,14 +276,14 @@ def dtype_drift_scan(sf_dir: str) -> dict[str, list[str]]:
     return hits
 
 
-def order_fuzz(names: list[str], sf_dir: str) -> dict[str, str]:
+def order_fuzz(spark, names: list[str], sf_dir: str) -> dict[str, str]:
     """Run each query under two materially different partitionings and
-    require canonically identical output."""
+    require canonically identical output. The session's own values of
+    the two varied settings are restored after each query."""
     import __spark_entry__ as e
     from tools.check_oracle import canon_pdf
 
     qs = e.queries()
-    spark = None
     results: dict[str, str] = {}
     variants = [
         {"spark.sql.shuffle.partitions": "3",
@@ -273,9 +291,7 @@ def order_fuzz(names: list[str], sf_dir: str) -> dict[str, str]:
         {"spark.sql.shuffle.partitions": "32",
          "spark.sql.files.maxPartitionBytes": "134217728"},
     ]
-    from hdsp_hive_release_src_spark.session import get_spark
-
-    spark = get_spark(shuffle_partitions=8)
+    saved = {k: spark.conf.get(k, None) for k in variants[0]}
     for name in names:
         outs = []
         try:
@@ -290,9 +306,11 @@ def order_fuzz(names: list[str], sf_dir: str) -> dict[str, str]:
         except Exception as ex:  # noqa: BLE001 - recorded, not fatal
             results[name] = f"error: {str(ex)[:200]}"
         finally:
-            for k in ("spark.sql.shuffle.partitions",
-                      "spark.sql.files.maxPartitionBytes"):
-                spark.conf.unset(k)
+            for k, val in saved.items():
+                if val is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, val)
         print(f"  fuzz {name}: {results[name]}", file=sys.stderr)
     return results
 
@@ -320,10 +338,9 @@ LAYOUT_SENSITIVE = {
 }
 
 
-def main() -> None:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    fuzz_all = "--all" in sys.argv
-    sf_dir = args[0] if args else "/root/testdata/sf0.01"
+def audit(spark, sf_dir: str, fuzz_all: bool) -> tuple[dict, list[str]]:
+    """The whole audit on ``spark``: writes tools/ROUNDING_AUDIT.json
+    and returns (that record, names whose fuzz was not stable)."""
     verify_grid_cols(sf_dir)
     inv = static_inventory()
     float_qs = sorted(
@@ -335,9 +352,7 @@ def main() -> None:
         registry.load_all()
         fuzz_set = sorted(registry.QUERIES)
         for n in fuzz_set:
-            inv.setdefault(
-                n, {"sites": [], "query_class": "none"}
-            )
+            inv.setdefault(n, {"sites": [], "query_class": "none"})
     else:
         fuzz_set = float_qs
     fuzz_set = [n for n in fuzz_set if n not in LAYOUT_SENSITIVE]
@@ -349,7 +364,7 @@ def main() -> None:
     print(f"dtype drift scan: {drift or 'clean'}", file=sys.stderr)
     fi = float_image_rounds()
     print(f"float-image rounds: {fi or 'clean'}", file=sys.stderr)
-    fuzz = order_fuzz(fuzz_set, sf_dir)
+    fuzz = order_fuzz(spark, fuzz_set, sf_dir)
     for n, r in fuzz.items():
         inv[n]["fuzz"] = r
     for n, why in LAYOUT_SENSITIVE.items():
@@ -370,7 +385,17 @@ def main() -> None:
     path.write_text(json.dumps(out, indent=1, sort_keys=True))
     bad = [n for n, r in fuzz.items() if r != "stable"]
     print(f"wrote {path}; unstable/error: {bad}", file=sys.stderr)
-    sys.exit(1 if bad or drift else 0)
+    return out, bad
+
+
+def main() -> None:
+    from hdsp_hive_release_src_spark.session import get_spark
+
+    args = [a for a in sys.argv[1:] if not a.startswith("--")]
+    sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    spark = get_spark(shuffle_partitions=8)
+    out, bad = audit(spark, sf_dir, "--all" in sys.argv)
+    sys.exit(1 if bad or out["dtype_drift"] else 0)
 
 
 if __name__ == "__main__":

@@ -21,14 +21,12 @@ Usage::
 from __future__ import annotations
 
 import datetime as _dt
+import os
 import sys
 import time
 
 import duckdb
 import numpy as np
-
-SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-ONLY = set(sys.argv[2:])
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -97,70 +95,69 @@ def canon_pdf(pdf):
     return out
 
 
-def main():
+def check(spark, sf_dir: str, names=None) -> dict[str, tuple[str, str]]:
+    """{name: (status, detail)} in registry order for every registered
+    query, or only ``names`` when given. status is PASS, FAIL or rows
+    (no oracle: a rows-only check)."""
     import __spark_entry__ as e
-    from hdsp_hive_release_src_spark.session import get_spark
 
-    spark = get_spark(shuffle_partitions=8)
+    out: dict[str, tuple[str, str]] = {}
     con = duckdb.connect()
     for t in TABLES:
         # driver testdata is one file per table; Spark-written dirs
         # (e.g. the 10x stress replica) need the part-file glob —
         # Spark reads both shapes natively, DuckDB only globs dirs
-        import os
-
-        p = f"{SF_DIR}/{t}.parquet"
+        p = f"{sf_dir}/{t}.parquet"
         src = f"{p}/*.parquet" if os.path.isdir(p) else p
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
     qs, oracles = e.queries(), e.oracle_sql()
-    n_pass = n_fail = n_rowsonly = 0
     for name, fn in qs.items():
-        if ONLY and name not in ONLY:
+        if names and name not in names:
             continue
         t0 = time.time()
         try:
-            df = fn(spark, SF_DIR)
+            df = fn(spark, sf_dir)
             spdf = df.toPandas()
         except Exception as ex:
-            print(f"FAIL {name}: spark error: {ex}")
-            n_fail += 1
+            out[name] = ("FAIL", f"spark error: {ex}")
             continue
         if name not in oracles:
-            print(f"rows {name}: {len(spdf)} rows (rows-only check) "
-                  f"[{time.time()-t0:.1f}s]")
-            n_rowsonly += 1
+            out[name] = ("rows", f"{len(spdf)} rows (rows-only check) "
+                                 f"[{time.time()-t0:.1f}s]")
             continue
         try:
             dpdf = con.execute(oracles[name]).df()
         except Exception as ex:
-            print(f"FAIL {name}: duckdb error: {ex}")
-            n_fail += 1
+            out[name] = ("FAIL", f"duckdb error: {ex}")
             continue
         scols, dcols = list(spdf.columns), list(dpdf.columns)
-        ok = True
         if sorted(scols) != sorted(dcols):
-            print(f"FAIL {name}: cols spark={sorted(scols)} "
-                  f"duck={sorted(dcols)}")
-            ok = False
+            out[name] = ("FAIL", f"cols spark={sorted(scols)} "
+                                 f"duck={sorted(dcols)}")
         elif len(spdf) != len(dpdf):
-            print(f"FAIL {name}: rowcount spark={len(spdf)} "
-                  f"duck={len(dpdf)}")
-            ok = False
+            out[name] = ("FAIL", f"rowcount spark={len(spdf)} "
+                                 f"duck={len(dpdf)}")
+        elif (cs := canon_pdf(spdf)) != (cd := canon_pdf(dpdf)):
+            diff = [(a, b) for a, b in zip(cs, cd) if a != b][:3]
+            out[name] = ("FAIL", f"value mismatch, first diffs: {diff}")
         else:
-            cs, cd = canon_pdf(spdf), canon_pdf(dpdf)
-            if cs != cd:
-                diff = [(a, b) for a, b in zip(cs, cd) if a != b][:3]
-                print(f"FAIL {name}: value mismatch, first diffs: "
-                      f"{diff}")
-                ok = False
-        if ok:
-            print(f"PASS {name}: {len(spdf)} rows "
-                  f"[{time.time()-t0:.1f}s]")
-            n_pass += 1
-        else:
-            n_fail += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
-    sys.exit(1 if n_fail else 0)
+            out[name] = ("PASS", f"{len(spdf)} rows "
+                                 f"[{time.time()-t0:.1f}s]")
+    con.close()
+    return out
+
+
+def main():
+    from hdsp_hive_release_src_spark.session import get_spark
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    verdicts = check(get_spark(shuffle_partitions=8), sf_dir, sys.argv[2:])
+    for name, (status, detail) in verdicts.items():
+        print(f"{status} {name}: {detail}")
+    n = [st for st, _ in verdicts.values()]
+    print(f"\n{n.count('PASS')} pass, {n.count('FAIL')} fail, "
+          f"{n.count('rows')} rows-only")
+    sys.exit(1 if "FAIL" in n else 0)
 
 
 if __name__ == "__main__":
