@@ -125,6 +125,21 @@ def get_spark(
                 + " -XX:ReservedCodeCacheSize=512m"
             ).strip(),
         )
+        # Spark caches compiled whole-stage-codegen classes in an LRU
+        # of spark.sql.codegen.cache.maxEntries (default 100). One
+        # olap_10x pass compiles ~135 distinct classes and one
+        # dedup_10x pass ~270-300 (~430 for both), so a shuffled round
+        # order evicts each class before its next use: every warm
+        # round re-compiled 57-101 (olap) / 253-302 (dedup) classes,
+        # each fresh bytecode HotSpot must interpret and JIT again
+        # (10-13 s of JIT per warm olap round vs 4-6 s executor CPU).
+        # 2048 holds 4x+ the measured working set; warm rounds then
+        # compile 0 classes on olap_10x, and peak RSS did not rise in
+        # the perfbench A/B. Static conf: like the code cache
+        # above it applies only when THIS call launches the JVM — a
+        # foreign driver session keeps Spark's 100, and
+        # tune_for_oracle cannot change it.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
