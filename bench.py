@@ -492,7 +492,7 @@ def _io_probe(spark, replica_dir: str) -> float:
 
 
 def _stress_overrides():
-    from hdsp_hive_release_src_spark.queries.llm9 import (
+    from hdsp_hive_release_src_spark.queries.text.corpus import (
         heavy_hitters_tokens_with_den,
     )
 

@@ -30,6 +30,11 @@ TABLES = (
 #: join planners should broadcast these (SURVEY.md §4).
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
+#: orders.o_totalprice as exact integer cents, identical on both engines
+#: (round-half-away on positive values): a SQL fragment for Spark SQL
+#: expressions and DuckDB oracles alike.
+ORDER_CENTS = "CAST(round(o_totalprice * 100) AS BIGINT)"
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 

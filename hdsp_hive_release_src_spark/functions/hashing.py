@@ -28,6 +28,15 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+#: Prime modulus of the pairwise-independent integer hash families
+#: h(x) = ((a * x + b) mod P) mod W shared by the count-min, Bloom, KMV
+#: and stratified-ATE queries. P = 2^31 - 1 keeps a * x inside int64
+#: for any x < 2^31, so BOTH engines compute the identical exact
+#: integer — the property that makes those sketches oracle-hashable
+#: (an md5/xxhash bucket map would differ or need engine-specific hex
+#: plumbing).
+CMS_P = 2_147_483_647
+
 
 def bind_once(expr_sql: str, var: str, body_sql: str) -> str:
     """SQL for: evaluate ``expr_sql`` once, bind as ``var`` in body."""

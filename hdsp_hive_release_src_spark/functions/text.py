@@ -24,6 +24,10 @@ LANG_STOPWORDS = {
     "zh": STOPWORDS_ZH,
 }
 
+# Non-empty whitespace tokens as a Spark SQL expression, shared shape
+# with the oracles' string_split + filter.
+WORD_TOKENS_SQL = "filter(split(text, ' '), t -> t != '')"
+
 
 def tokens(text_col: str) -> Column:
     """Whitespace tokens (Hive sentences()/split() analog)."""

@@ -3,7 +3,7 @@ small-star (Kiveris et al., "Connected Components in MapReduce and
 Beyond", 2014) — the bounded-fan-out form of the min-label fixpoint.
 
 Why this exists next to plain min-label propagation
-(queries/llm2.py::near_dup_component_labels): label propagation runs
+(queries/text/dedup.py::near_dup_component_labels): label propagation runs
 O(component diameter) rounds and each round's message volume is the
 full edge list; the star algorithm contracts paths, so the round count
 is O(log² n) in the worst case and every round strictly shrinks the

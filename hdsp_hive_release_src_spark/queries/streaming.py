@@ -1,18 +1,28 @@
-"""SURVEY.md §2.3 — streaming operators as driver-checkable queries.
+"""Streaming domain: Structured Streaming queries.
 
-These run a real Structured Streaming job to completion (memory sink,
-processAllAvailable) and return the materialized result. Where the
-streaming semantics are batch-equivalent over a finite input
-(complete-mode window aggs, dedup-then-count), the DuckDB oracle checks
-FULL value parity with the batch definition — stronger than the usual
-rows-only check for streaming.
+Windowed and stateful aggregation, stream joins, dedup, watermarks and
+late data, sinks, triggers, exactly-once checkpoints and Python
+streaming data sources. Each query drains a bounded source to
+completion and returns the final sink state.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+import shutil
 
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
+
+from hdsp_hive_release_src_spark.catalog import Catalog
 from hdsp_hive_release_src_spark.registry import query
+from hdsp_hive_release_src_spark.sources.io import scratch_path
+from hdsp_hive_release_src_spark.sources.python_datasources import (
+    PYSTREAM_N,
+    PYSTREAM_STEP,
+    CounterStreamSource,
+    TwoPhaseFileSink,
+)
 from hdsp_hive_release_src_spark.streaming import jobs
 
 
@@ -349,4 +359,306 @@ def stream_checkpoint_exactly_once(
         )
         .cast("long")
         .alias("n_duplicates"),
+    )
+
+
+# --------------------------------------------------------------------
+# streaming output-mode parity
+# --------------------------------------------------------------------
+
+@query(
+    "stream_output_modes",
+    oracle="""
+    WITH day_counts AS (
+      SELECT CAST(date_trunc('day', CAST(ts AS TIMESTAMP))
+                  AS TIMESTAMP) AS day,
+             event_type, count(*) AS n
+      FROM events GROUP BY day, event_type)
+    SELECT mode, day, event_type, n
+    FROM day_counts
+    CROSS JOIN (VALUES ('complete'), ('update')) AS m(mode)
+    ORDER BY mode, day, event_type
+    """,
+)
+def stream_output_modes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Output-mode parity: the SAME tumbling-day aggregation run in
+    complete mode (memory sink holds the full result) and update mode
+    (foreachBatch upserts last-write-wins into a dict keyed by group —
+    the idempotent-merge contract update mode requires of its sink).
+    Both must converge to the batch truth regardless of how the file
+    source batches the input — which is exactly the guarantee a
+    100 TB streaming backfill leans on when it replays history through
+    the same query that serves live traffic."""
+    from hdsp_hive_release_src_spark.streaming import jobs
+
+    ev = jobs.read_events_stream(spark, sf_dir)
+    agg = ev.groupBy(
+        F.window("ts", "1 day").alias("w"), "event_type"
+    ).agg(F.count(F.lit(1)).alias("n"))
+
+    # complete mode: memory sink IS the full result table
+    name = jobs.run_to_memory(agg, "complete", "out_modes")
+    complete = (
+        spark.table(name)
+        .select(
+            F.lit("complete").alias("mode"),
+            F.col("w.start").alias("day"),
+            "event_type",
+            "n",
+        )
+    )
+
+    # update mode: last-write-wins upsert per group via foreachBatch
+    state: dict[tuple, int] = {}
+
+    def upsert(bdf: DataFrame, batch_id: int) -> None:
+        for r in bdf.collect():
+            state[(r["w"]["start"], r["event_type"])] = r["n"]
+
+    q = (
+        agg.writeStream.outputMode("update")
+        .foreachBatch(upsert)
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    upd_rows = [
+        ("update", day, et, n) for (day, et), n in state.items()
+    ]
+    update = spark.createDataFrame(
+        upd_rows, "mode string, day timestamp, event_type string, n long"
+    )
+    return complete.unionByName(update).orderBy(
+        "mode", "day", "event_type"
+    )
+
+
+# --------------------------------------------------------------------
+# chained streaming windows
+# --------------------------------------------------------------------
+
+@query(
+    "stream_chained_windows",
+    oracle="""
+    WITH b AS (
+      SELECT CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
+    mx AS (SELECT max(ts) AS m FROM b),
+    hourly AS (
+      SELECT date_trunc('hour', ts) AS h, date_trunc('day', ts) AS d,
+             event_type, CAST(count(*) AS BIGINT) AS c
+      FROM b GROUP BY 1, 2, 3),
+    daily AS (
+      SELECT d, event_type,
+             CAST(sum(c) AS BIGINT) AS n_events,
+             CAST(count(*) AS BIGINT) AS n_hours,
+             CAST(max(c) AS BIGINT) AS max_hour
+      FROM hourly GROUP BY d, event_type)
+    SELECT d AS day, event_type, n_events, n_hours, max_hour
+    FROM daily, mx
+    WHERE d + INTERVAL 1 DAY <= mx.m - INTERVAL 1 HOUR
+    ORDER BY day, event_type
+    """,
+)
+def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chained hourly→daily windows in one streaming query (multiple
+    stateful operators, append mode) — see
+    streaming/jobs.py::chained_windows for the state-bound analysis.
+    The oracle replays the batch rollup and keeps exactly the days
+    the append watermark finalizes (day end ≤ max ts − 1 h)."""
+    from hdsp_hive_release_src_spark.streaming import jobs
+
+    return jobs.chained_windows(spark, sf_dir).orderBy(
+        "day", "event_type"
+    )
+
+
+_PYSTREAM_ORACLE = f"""
+SELECT CAST(i % 7 AS BIGINT) AS bucket,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(i) AS BIGINT) AS sum_i,
+       CAST(sum(i * i) AS BIGINT) AS sum_sq
+FROM range({PYSTREAM_N}) t(i)
+GROUP BY 1 ORDER BY 1
+"""
+
+
+@query("python_datasource_stream", oracle=_PYSTREAM_ORACLE)
+def python_datasource_stream(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """A user-defined Python STREAMING source run to completion:
+    {PYSTREAM_N} counter rows arrive in ragged {PYSTREAM_STEP}-row
+    micro-batches through ``SimpleDataSourceStreamReader`` (the
+    engine checkpoints the reader's offsets between batches), drained
+    with processAllAvailable into a memory sink, then aggregated per
+    mod-7 bucket. The oracle is the closed-form range aggregate — a
+    skipped or replayed micro-batch changes every bucket, so
+    exactly-once offset progression is precisely what the gate
+    checks. cites pyspark.sql.datasource (public API)."""
+    try:
+        spark.dataSource.register(CounterStreamSource)
+    except Exception:
+        pass
+    df = (
+        spark.readStream.format("pycounterstream")
+        .option("n", PYSTREAM_N)
+        .option("step", PYSTREAM_STEP)
+        .load()
+    )
+    qname = "pystream_counter_sink"
+    q = (
+        df.writeStream.format("memory")
+        .queryName(qname)
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return (
+        spark.table(qname)
+        .groupBy((F.col("i") % 7).cast("long").alias("bucket"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("i").cast("long").alias("sum_i"),
+            F.sum("sq").cast("long").alias("sum_sq"),
+        )
+        .orderBy("bucket")
+    )
+
+
+_SINK_ORACLE = f"""
+SELECT CAST(i % 9 AS BIGINT) AS bucket,
+       CAST(count(*) AS BIGINT) AS n,
+       CAST(sum(i) AS BIGINT) AS sum_i,
+       CAST(sum(i * i) AS BIGINT) AS sum_sq
+FROM range({PYSTREAM_N}) t(i)
+GROUP BY 1 ORDER BY 1
+"""
+
+
+@query("python_datasource_stream_sink", oracle=_SINK_ORACLE)
+def python_datasource_stream_sink(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """The bounded counter stream written through a USER-DEFINED
+    streaming sink with a real two-phase commit (temp file per task →
+    commit message → driver rename on ``commit(batchId)``), then read
+    back from the committed files only and aggregated per mod-9
+    bucket against the closed-form oracle. A replayed or lost
+    micro-batch, a double-committed partition, or a leaked
+    uncommitted attempt all shift the bucket sums — so the 2PC
+    contract itself is what the gate verifies. Checkpointed to a
+    per-scale scratch dir; data+checkpoint are wiped first, making
+    re-runs deterministic."""
+    path = scratch_path("twophasesink", sf_dir)
+    ckpt = scratch_path("twophasesink_ckpt", sf_dir)
+    for d in (path, ckpt):
+        if os.path.isdir(d):
+            import shutil
+
+            shutil.rmtree(d)
+    for src in (CounterStreamSource, TwoPhaseFileSink):
+        try:
+            spark.dataSource.register(src)
+        except Exception:
+            pass
+    df = (
+        spark.readStream.format("pycounterstream")
+        .option("n", PYSTREAM_N)
+        .option("step", PYSTREAM_STEP)
+        .load()
+    )
+    q = (
+        df.writeStream.format("twophasefilesink")
+        .option("path", path)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    back = (
+        spark.read.text(os.path.join(path, "b*.txt"))
+        .select(
+            F.split(F.col("value"), ",")[0].cast("long").alias("i"),
+            F.split(F.col("value"), ",")[1].cast("long").alias("sq"),
+        )
+    )
+    return (
+        back.groupBy((F.col("i") % 9).cast("long").alias("bucket"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("i").cast("long").alias("sum_i"),
+            F.sum("sq").cast("long").alias("sum_sq"),
+        )
+        .orderBy("bucket")
+    )
+
+
+@query(
+    "watermark_lateness_profile",
+    oracle="""
+    WITH arr AS (
+      SELECT event_id, CAST(ts AS TIMESTAMP) AS ts,
+             max(CAST(ts AS TIMESTAMP)) OVER
+               (ORDER BY event_id
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               AS high_water
+      FROM events),
+    late AS (
+      SELECT CAST((epoch_us(high_water) - epoch_us(ts)) / 1000000.0
+                  AS DOUBLE) AS lateness_s
+      FROM arr)
+    SELECT CAST(count(*) AS BIGINT) AS n_events,
+           CAST(sum(CASE WHEN lateness_s > 0 THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_out_of_order,
+           round(max(lateness_s), 2) AS max_lateness_s,
+           round(quantile_cont(lateness_s, 0.99), 2) AS p99_lateness_s
+    FROM late
+    """,
+)
+def watermark_lateness_profile(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Out-of-orderness profile — the measurement that SETS a
+    watermark delay instead of guessing it: replaying events in
+    arrival order (event_id), each event's lateness is how far it
+    trails the running event-time high-water mark; the p99/max tell
+    you what `withWatermark` delay keeps (almost) everything while
+    bounding state. The running max is a single ordered pass in
+    arrival order — in production this profile is computed per
+    partition/source (arrival order only exists per partition), here
+    globally so the oracle can replay it exactly."""
+    ev = Catalog(spark, sf_dir).events
+    w = Window.orderBy("event_id").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    arr = ev.select(
+        "ts", F.max("ts").over(w).alias("high_water")
+    )
+    late = arr.select(
+        (
+            (
+                F.unix_micros("high_water") - F.unix_micros("ts")
+            )
+            / 1e6
+        ).alias("lateness_s")
+    )
+    late.createOrReplaceTempView("lateness_src")
+    return spark.sql(
+        """
+        SELECT CAST(count(*) AS BIGINT) AS n_events,
+               CAST(sum(CASE WHEN lateness_s > 0 THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_out_of_order,
+               round(max(lateness_s), 2) AS max_lateness_s,
+               round(percentile_cont(0.99) WITHIN GROUP
+                     (ORDER BY lateness_s), 2) AS p99_lateness_s
+        FROM lateness_src
+        """
     )

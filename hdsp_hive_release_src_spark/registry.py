@@ -6,6 +6,8 @@ SQL string. ``__spark_entry__.py`` re-exports these for the driver.
 from __future__ import annotations
 
 import functools
+import importlib
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,7 +84,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # (optimization round 2 of 2), both values-identical and oracle
 # re-proven, re-certify first per the standing plan-or-operator-
 # changed policy:
-#   * the shared shingle pair-generation core (queries/llm.py
+#   * the shared shingle pair-generation core (operators/jaccard.py
 #     shingle_pair_counts) now groups the pair aggregation on
 #     (d1, d2) alone — per-doc sizes ride as max() aggregates (n is
 #     functionally dependent on the doc id) — and
@@ -93,7 +95,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #   * semantic_dedup's three scratch-parquet materializations
 #     (group / assignment / membership tables) are now
 #     localCheckpoint / DISK_ONLY-persist-with-deferred-release
-#     (llm7.py docstring) — same single-build lifecycle, no file
+#     (queries/vectors.py docstring) — same single-build lifecycle, no file
 #     I/O, 2 executed corpus scans unchanged.
 # The remaining slots continue the staleness drain (oldest
 # last-certified rounds first, from the regenerated certification).
@@ -114,7 +116,7 @@ _CHANGED_THIS_ROUND: tuple[str, ...] = (
     # of an exact decimal revenue sum — the q9 half-boundary class,
     # caught by the audit's new float-image scan; engine and oracle
     # now round the exact decimal before the cast, in lockstep
-    # (olap_surface.py). sf0.01 values unchanged (verified); plan
+    # (queries/olap.py). sf0.01 values unchanged (verified); plan
     # changed, so they re-certify.
     "mv_auto_rewrite",
     "materialized_view_rewrite",
@@ -149,95 +151,14 @@ _VERIFY_FIRST = (
 
 
 def load_all() -> None:
-    """Import every query module so registration side effects run, then
-    apply the _VERIFY_FIRST walk order (see its comment)."""
-    from hdsp_hive_release_src_spark.queries import (  # noqa: F401
-        tpch,
-        tpch_extra,
-        llm,
-        llm2,
-        llm3,
-        llm4,
-        llm5,
-        modern_surface,
-        modern_surface2,
-        warehouse_surface,
-        etl_surface,
-        multimodal2,
-        engine_surface2,
-        functions_suite2,
-        schema_surface,
-        functions_suite3,
-        functions_suite4,
-        graph,
-        product_analytics,
-        analytics2,
-        stats2,
-        llm6,
-        llm7,
-        llm8,
-        events2,
-        functions_suite5,
-        functions_suite6,
-        streaming,
-        sources,
-        events,
-        timeseries,
-        analytics,
-        engine_surface,
-        extras,
-        extras2,
-        extras3,
-        functions_suite,
-        hive_surface,
-        hive_gaps,
-        olap_surface,
-        udf_surface,
-        catalog_surface,
-        llm9,
-        governance_surface,
-        round7,
-        functions_suite7,
-        llm10,
-        functions_suite8,
-        math_datetime_suite,
-        geo_suite,
-        functions_suite9,
-        analytics3,
-        modern_surface3,
-        modern_surface4,
-        round8,
-        round8b,
-        round9,
-        round9b,
-        round9c,
-        round9d,
-        round9e,
-        round9f,
-        round9g,
-        round9h,
-        round9i,
-        round9j,
-        round9k,
-        round9l,
-        round9m,
-        round9n,
-        round9o,
-        round9p,
-        round9q,
-        round9r,
-        round9s,
-        round9t,
-        round9u,
-        round9v,
-        round9w,
-        round9x,
-        round9y,
-        round9z,
-        round9aa,
-        round9ab,
-        round9ac,
-    )
+    """Import every module under ``queries/`` so registration side
+    effects run, then apply the _VERIFY_FIRST walk order (see its
+    comment) to QUERIES and ORACLES. Modules are found by discovery:
+    a new query module needs no entry here."""
+    from hdsp_hive_release_src_spark import queries
+
+    for mod in pkgutil.walk_packages(queries.__path__, queries.__name__ + "."):
+        importlib.import_module(mod.name)
 
     ordered = {n: QUERIES[n] for n in _VERIFY_FIRST if n in QUERIES}
     ordered.update(
@@ -245,3 +166,6 @@ def load_all() -> None:
     )
     QUERIES.clear()
     QUERIES.update(ordered)
+    oracles = {n: ORACLES[n] for n in QUERIES if n in ORACLES}
+    ORACLES.clear()
+    ORACLES.update(oracles)

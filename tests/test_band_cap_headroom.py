@@ -23,13 +23,13 @@ def _max_group(df, keys):
 
 
 def test_lsh_band_buckets_far_below_cap(spark, sf_dir):
-    from hdsp_hive_release_src_spark.queries.llm import (
+    from hdsp_hive_release_src_spark.operators.jaccard import (
         MAX_BAND_BUCKET,
-        _parallel_docs,
-        lsh_banded,
+        parallel_docs,
     )
+    from hdsp_hive_release_src_spark.queries.text.dedup import lsh_banded
 
-    mx = _max_group(lsh_banded(_parallel_docs(spark, sf_dir)),
+    mx = _max_group(lsh_banded(parallel_docs(spark, sf_dir)),
                     ["band", "bh"])
     assert mx <= MAX_BAND_BUCKET // 4, (
         f"LSH band bucket occupancy {mx} is within 4x of the "
@@ -38,13 +38,13 @@ def test_lsh_band_buckets_far_below_cap(spark, sf_dir):
 
 
 def test_simhash_band_buckets_far_below_cap(spark, sf_dir):
-    from hdsp_hive_release_src_spark.queries.llm import (
+    from hdsp_hive_release_src_spark.operators.jaccard import (
         MAX_BAND_BUCKET,
-        _parallel_docs,
-        simhash_banded,
+        parallel_docs,
     )
+    from hdsp_hive_release_src_spark.queries.text.dedup import simhash_banded
 
-    mx = _max_group(simhash_banded(_parallel_docs(spark, sf_dir)),
+    mx = _max_group(simhash_banded(parallel_docs(spark, sf_dir)),
                     ["band", "bh"])
     assert mx <= MAX_BAND_BUCKET // 4, (
         f"SimHash band bucket occupancy {mx} is within 4x of the "
@@ -63,9 +63,7 @@ def test_semantic_cells_far_below_cap(spark, sf_dir):
         l2_norm,
         to_double,
     )
-    from hdsp_hive_release_src_spark.queries.llm7 import (
-        SEMANTIC_MAX_CELL,
-    )
+    from hdsp_hive_release_src_spark.queries.vectors import SEMANTIC_MAX_CELL
 
     e = Catalog(spark, sf_dir).embeddings.select(
         "vec_id", to_double("embedding").alias("v")

@@ -87,7 +87,7 @@ def test_star_matches_label_propagation_on_real_pair_graph(spark):
     with the independent min-label-propagation reference on the real
     Jaccard pair graph (the r10 swap's lockstep guarantee)."""
     from hdsp_hive_release_src_spark import registry
-    from hdsp_hive_release_src_spark.queries.llm2 import (
+    from hdsp_hive_release_src_spark.queries.text.dedup import (
         label_propagation_component_labels,
         near_dup_component_labels,
     )

@@ -1,5 +1,6 @@
-"""Wave-4 queries (queries/extras.py): oracle parity at sf0.001 plus
-the plan-shape guarantees that make them scale-safe."""
+"""band_join_order_pairs, listagg_sorted, streak_islands and
+skew_salted_join_agg: oracle parity at sf0.001 plus the plan-shape
+guarantees that make them scale-safe."""
 
 from __future__ import annotations
 

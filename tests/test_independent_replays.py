@@ -194,7 +194,7 @@ def test_largest_remainder_matches_python_replay(spark):
 
 
 def test_rsi_matches_pandas_rolling_replay(spark):
-    from hdsp_hive_release_src_spark.queries.round9m import TA_WIN
+    from hdsp_hive_release_src_spark.queries.events.timeseries import TA_WIN
 
     registry.load_all()
     rows = {

@@ -33,9 +33,9 @@ def _events_us() -> pd.DataFrame:
 
 
 def test_count_min_sketch_rebuilt_in_python(spark):
-    from hdsp_hive_release_src_spark.queries.llm10 import (
+    from hdsp_hive_release_src_spark.functions.hashing import CMS_P
+    from hdsp_hive_release_src_spark.queries.stats.sketches import (
         CMS_HASHES,
-        CMS_P,
         CMS_TOPN,
         CMS_W,
     )
@@ -67,12 +67,12 @@ def test_count_min_sketch_rebuilt_in_python(spark):
 
 
 def test_kmv_kth_minimum_rebuilt_in_python(spark):
-    from hdsp_hive_release_src_spark.queries.analytics3 import (
+    from hdsp_hive_release_src_spark.queries.stats.sketches import (
         KMV_A,
         KMV_B,
         KMV_K,
     )
-    from hdsp_hive_release_src_spark.queries.llm10 import CMS_P
+    from hdsp_hive_release_src_spark.functions.hashing import CMS_P
 
     registry.load_all()
     row = registry.QUERIES["kmv_distinct_estimate"](spark, SF).collect()[0]
@@ -88,11 +88,11 @@ def test_kmv_kth_minimum_rebuilt_in_python(spark):
 
 
 def test_bloom_filter_rebuilt_in_python(spark):
-    from hdsp_hive_release_src_spark.queries.llm10 import (
+    from hdsp_hive_release_src_spark.functions.hashing import CMS_P
+    from hdsp_hive_release_src_spark.queries.stats.sketches import (
         BLOOM_HASHES,
         BLOOM_M,
         BLOOM_MIN_PURCHASES,
-        CMS_P,
     )
 
     registry.load_all()

@@ -37,7 +37,7 @@ def _r2(x: float) -> float:  # HALF_UP to cents on non-negative values
 
 
 def test_heavy_hitters_exact_counter_replay(spark):
-    from hdsp_hive_release_src_spark.queries.llm9 import HH_DEN
+    from hdsp_hive_release_src_spark.queries.text.corpus import HH_DEN
 
     registry.load_all()
     rows = registry.QUERIES["heavy_hitters_topk"](spark, SF).collect()

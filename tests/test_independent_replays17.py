@@ -45,7 +45,7 @@ def test_sequence_packing_cumsum_replay(spark):
 
 
 def test_doc_chunk_overlap_hash_replay(spark):
-    from hdsp_hive_release_src_spark.queries.llm5 import CHUNK, STRIDE
+    from hdsp_hive_release_src_spark.queries.text.dedup import CHUNK, STRIDE
 
     registry.load_all()
     rows = registry.QUERIES["doc_chunk_overlap"](spark, SF).collect()

@@ -62,7 +62,7 @@ def test_hits_matches_python_power_iteration(spark):
 
 
 def test_km_survival_matches_python_replay(spark):
-    from hdsp_hive_release_src_spark.queries.round9l import KM_CENTS
+    from hdsp_hive_release_src_spark.queries.stats.inference import KM_CENTS
 
     registry.load_all()
     rows = {

@@ -100,7 +100,7 @@ def test_blocked_fuzzy_join_per_block_replay(spark):
 
 
 def test_chunk_dedup_summary_replay(spark):
-    from hdsp_hive_release_src_spark.queries.llm5 import CHUNK, STRIDE
+    from hdsp_hive_release_src_spark.queries.text.dedup import CHUNK, STRIDE
 
     registry.load_all()
     row = registry.QUERIES["chunk_dedup_exact"](spark, SF).collect()[0]

@@ -13,7 +13,7 @@ import pandas as pd
 import pyarrow.parquet as pq
 
 from hdsp_hive_release_src_spark import registry
-from hdsp_hive_release_src_spark.queries.llm10 import PREFIX_FP_LEN
+from hdsp_hive_release_src_spark.queries.text.dedup import PREFIX_FP_LEN
 
 SF = "/root/testdata/sf0.001"
 

@@ -326,9 +326,7 @@ def test_winsorized_matches_python_order_stats(spark):
 
 
 def test_cosupply_matches_python_pair_counting(spark):
-    from hdsp_hive_release_src_spark.queries.round9i import (
-        COSUPPLY_MAX_DEGREE,
-    )
+    from hdsp_hive_release_src_spark.queries.graph import COSUPPLY_MAX_DEGREE
 
     registry.load_all()
     rows = {

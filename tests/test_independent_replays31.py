@@ -69,7 +69,7 @@ def test_char_entropy_vs_python_counter(spark):
 
 
 def test_bigram_lm_trained_and_scored_in_dicts(spark):
-    from hdsp_hive_release_src_spark.queries.llm6 import _REF_SOURCE
+    from hdsp_hive_release_src_spark.queries.text.quality import _REF_SOURCE
 
     registry.load_all()
     rows = registry.QUERIES["bigram_lm_score"](spark, SF).collect()

@@ -101,7 +101,7 @@ def test_autocorr_matches_numpy_corrcoef(spark):
 def test_bootstrap_ci_matches_pure_python_resample(spark):
     """Hash-for-hash replay of the deterministic membership plus the
     order statistics in plain Python dicts."""
-    from hdsp_hive_release_src_spark.queries.round8 import (
+    from hdsp_hive_release_src_spark.queries.stats.inference import (
         _BOOT_A,
         _BOOT_B,
         _BOOT_P,

@@ -212,7 +212,7 @@ def test_dsir_matches_dict_bucket_models(spark):
 
 
 def test_bm25_matches_python_scoring(spark):
-    from hdsp_hive_release_src_spark.queries.round7 import (
+    from hdsp_hive_release_src_spark.queries.text.corpus import (
         _BM25_B,
         _BM25_K1,
         _BM25_TERMS,
@@ -268,7 +268,7 @@ def test_ann_lsh_matches_python_buckets(spark):
     """Hash-for-hash LSH replay: the md5-derived hyperplanes, the
     left-fold dot products, bucket sign bits, per-bucket exact cosine
     top-10 — all in pure Python floats."""
-    from hdsp_hive_release_src_spark.queries.llm import _hyperplanes
+    from hdsp_hive_release_src_spark.queries.vectors import _hyperplanes
 
     registry.load_all()
     rows = registry.QUERIES["ann_lsh_topk"](spark, SF).collect()
@@ -305,7 +305,7 @@ def test_ann_pq_matches_python_adc(spark):
     argmin codes, ADC table lookups — pure Python."""
     import hashlib
 
-    from hdsp_hive_release_src_spark.queries.llm7 import (
+    from hdsp_hive_release_src_spark.queries.vectors import (
         _PQ_DSUB,
         _PQ_K,
         _PQ_M,

@@ -48,7 +48,7 @@ def test_user_path_trigrams_matches_python_replay(spark):
 
 
 def test_sessionization_capped_matches_python_replay(spark):
-    from hdsp_hive_release_src_spark.queries.round9o import (
+    from hdsp_hive_release_src_spark.queries.events.sessions import (
         SESSION_CAP_S,
         SESSION_GAP_S,
     )
@@ -96,7 +96,7 @@ def test_sessionization_capped_matches_python_replay(spark):
 
 
 def test_k_anonymity_matches_python_replay(spark):
-    from hdsp_hive_release_src_spark.queries.round9ab import (
+    from hdsp_hive_release_src_spark.queries.governance import (
         KANON_BAND,
         KANON_K,
     )
@@ -168,7 +168,7 @@ def test_touch_attribution_matches_python_replay(spark):
 
 
 def test_cascading_erasure_matches_python_replay(spark):
-    from hdsp_hive_release_src_spark.queries.round9aa import ERASE_MOD
+    from hdsp_hive_release_src_spark.queries.governance import ERASE_MOD
 
     registry.load_all()
     rows = {

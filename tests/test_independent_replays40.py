@@ -57,7 +57,7 @@ def test_shard_manifest_matches_python_nibbles(spark):
 
 
 def test_global_shuffle_matches_python_permutation(spark):
-    from hdsp_hive_release_src_spark.queries.round8 import (
+    from hdsp_hive_release_src_spark.queries.text.quality import (
         _SHUF_A,
         _SHUF_B,
         _SHUF_P,
@@ -136,7 +136,7 @@ def test_fixed_size_sample_matches_python_bottom_k(spark):
 
 
 def test_kfold_matches_python_affine_hash(spark):
-    from hdsp_hive_release_src_spark.queries.round9c import (
+    from hdsp_hive_release_src_spark.queries.text.quality import (
         _KF_A,
         _KF_C,
         _KF_K,

@@ -20,7 +20,7 @@ def _tbl(name: str) -> pd.DataFrame:
 
 
 def test_abc_pareto_matches_pandas_cumshare(spark):
-    from hdsp_hive_release_src_spark.queries.round9m import (
+    from hdsp_hive_release_src_spark.queries.olap import (
         ABC_A_PERMILLE,
         ABC_B_PERMILLE,
     )
@@ -58,7 +58,7 @@ def test_abc_pareto_matches_pandas_cumshare(spark):
 
 
 def test_boilerplate_bias_matches_dict_positions(spark):
-    from hdsp_hive_release_src_spark.queries.round7 import (
+    from hdsp_hive_release_src_spark.queries.text.quality import (
         _BP_HEAD,
         _BP_MIN_TOTAL,
     )
@@ -102,9 +102,7 @@ def test_topo_layers_match_python_dp(spark):
     edge n -> 2n/3n strictly increases the key, so ascending order IS
     a topological order) — independent of the impl's fixed-round
     frontier propagation."""
-    from hdsp_hive_release_src_spark.queries.round8b import (
-        _TOPO_MAX_KEY,
-    )
+    from hdsp_hive_release_src_spark.queries.graph import _TOPO_MAX_KEY
 
     registry.load_all()
     rows = registry.QUERIES["topo_sort_layers"](spark, SF).collect()

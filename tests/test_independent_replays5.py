@@ -136,7 +136,7 @@ def test_readability_bands_match_python_replay(spark):
 
 
 def test_association_rules_match_python_replay(spark):
-    from hdsp_hive_release_src_spark.queries.round9i import (
+    from hdsp_hive_release_src_spark.queries.stats.inference import (
         RULES_MIN_SUPPORT,
     )
 
@@ -192,7 +192,7 @@ def test_association_rules_match_python_replay(spark):
 
 
 def test_ra_link_prediction_matches_python_replay(spark):
-    from hdsp_hive_release_src_spark.queries.round9k import (
+    from hdsp_hive_release_src_spark.queries.graph import (
         RA_CUST_BOUND,
         RA_DEG_CAP,
         RA_TOP,

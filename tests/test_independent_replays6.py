@@ -44,10 +44,7 @@ def test_funnel_pattern_match_matches_python_replay(spark):
 
 
 def test_kcore_peeling_matches_python_replay(spark):
-    from hdsp_hive_release_src_spark.queries.round9j import (
-        KCORE_K,
-        KCORE_ROUNDS,
-    )
+    from hdsp_hive_release_src_spark.queries.graph import KCORE_K, KCORE_ROUNDS
 
     registry.load_all()
     rows = {
@@ -94,7 +91,7 @@ def test_kcore_peeling_matches_python_replay(spark):
 
 def test_rake_matches_python_replay(spark):
     from hdsp_hive_release_src_spark.functions.text import STOPWORDS_EN
-    from hdsp_hive_release_src_spark.queries.round9l import (
+    from hdsp_hive_release_src_spark.queries.text.corpus import (
         RAKE_MAX_LEN,
         RAKE_MIN_LEN,
         RAKE_TOP,
@@ -150,8 +147,11 @@ def test_rake_matches_python_replay(spark):
 
 
 def test_stratified_ate_matches_python_replay(spark):
-    from hdsp_hive_release_src_spark.queries.llm10 import CMS_P
-    from hdsp_hive_release_src_spark.queries.round9k import ATE_A, ATE_B
+    from hdsp_hive_release_src_spark.functions.hashing import CMS_P
+    from hdsp_hive_release_src_spark.queries.stats.inference import (
+        ATE_A,
+        ATE_B,
+    )
 
     registry.load_all()
     rows = {

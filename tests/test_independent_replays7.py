@@ -26,7 +26,7 @@ def _trunc_div(a: int, b: int) -> int:
 
 
 def test_vwap_rolling_matches_python_replay(spark):
-    from hdsp_hive_release_src_spark.queries.round9m import TA_WIN
+    from hdsp_hive_release_src_spark.queries.events.timeseries import TA_WIN
 
     registry.load_all()
     def _as_date(v):
@@ -165,7 +165,7 @@ def test_epoch_timezone_matrix_vs_python_datetime(spark):
 
 
 def test_fetch_with_ties_matches_python_replay(spark):
-    from hdsp_hive_release_src_spark.queries.round9s import TIES_K
+    from hdsp_hive_release_src_spark.queries.relational.sql import TIES_K
 
     registry.load_all()
     rows = [

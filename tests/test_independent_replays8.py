@@ -24,7 +24,9 @@ def _tbl(name: str) -> pd.DataFrame:
 
 
 def test_try_arith_matches_python_int_model(spark):
-    from hdsp_hive_release_src_spark.queries.round9l import _TRY_GRID
+    from hdsp_hive_release_src_spark.queries.builtin_functions.numeric import (
+        _TRY_GRID,
+    )
 
     registry.load_all()
     rows = {

@@ -51,7 +51,10 @@ def test_hyperbolic_matrix_vs_python_math(spark):
 
 
 def test_kll_exact_quantiles_vs_sorted_rank_replay(spark):
-    from hdsp_hive_release_src_spark.queries.round9t import KLL_K, KLL_MOD
+    from hdsp_hive_release_src_spark.queries.stats.sketches import (
+        KLL_K,
+        KLL_MOD,
+    )
 
     registry.load_all()
     rows = registry.QUERIES["kll_quantile_sketch_contract"](

@@ -366,7 +366,7 @@ class TestQueryCacheRelease:
         # r15: fed a RAW localCheckpoint into range_prefix_sum, which
         # the verified classifier refuses — caught as a retained
         # DISK_ONLY persist by the gates' cache-hygiene check;
-        # fixed via checkpoint_reduced (round9m.py)
+        # fixed via checkpoint_reduced (queries/olap.py)
         "abc_pareto_class",
         # r16: the former single documented retention — its
         # consumer-built two-type projection now unpersists at the

@@ -95,7 +95,7 @@ def test_minhash_agreement_tracks_jaccard(spark):
 def test_ann_lsh_buckets_are_diverse(spark):
     """Regression guard: hyperplane buckets must actually partition the
     corpus (not collapse to one value via expression aliasing)."""
-    from hdsp_hive_release_src_spark.queries.llm import _hyperplanes
+    from hdsp_hive_release_src_spark.queries.vectors import _hyperplanes
     from hdsp_hive_release_src_spark.functions.vectors import to_double
 
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -154,7 +154,7 @@ def test_jaccard_df_cap_drops_viral_shingles(spark):
     boilerplate; with the cap (20 < 30) the viral shingles leave the
     index and no pair survives — the quadratic blowup guard, actually
     exercised (the real corpus never trips it)."""
-    from hdsp_hive_release_src_spark.queries.llm import (
+    from hdsp_hive_release_src_spark.operators.jaccard import (
         jaccard_pairs_from_docs,
     )
 
@@ -172,7 +172,7 @@ def test_jaccard_df_cap_drops_viral_shingles(spark):
 def test_jaccard_pairs_empty_and_singleton_inputs(spark):
     """Degenerate corpora: no docs and one doc must both yield zero
     pairs (guards the postings-slice pair generation's boundary)."""
-    from hdsp_hive_release_src_spark.queries.llm import (
+    from hdsp_hive_release_src_spark.operators.jaccard import (
         jaccard_pairs_from_docs,
     )
 
@@ -196,7 +196,7 @@ def test_bounded_postings_prefilters_before_collect(spark):
     exchange — the guard that a viral key can spill but never
     materialize in an agg buffer."""
     from hdsp_hive_release_src_spark.plans import explain_str
-    from hdsp_hive_release_src_spark.queries.llm import (
+    from hdsp_hive_release_src_spark.operators.jaccard import (
         bounded_sorted_postings,
     )
 
@@ -324,7 +324,7 @@ def test_jaccard_size_filter_is_exact_at_the_threshold(spark):
       filtered output and a brute-force model;
     * the whole output equals an independent brute-force Jaccard over
       the same shingle sets (filter on/off paths converge)."""
-    from hdsp_hive_release_src_spark.queries.llm import (
+    from hdsp_hive_release_src_spark.operators.jaccard import (
         jaccard_pairs_from_docs,
         shingle_pair_counts,
     )

@@ -89,9 +89,7 @@ def test_zorder_layout_clusters_both_dimensions(spark):
             " AS BIGINT)"
         ).alias("d"),
     )
-    from hdsp_hive_release_src_spark.queries.engine_surface2 import (
-        _morton_bits,
-    )
+    from hdsp_hive_release_src_spark.queries.io_catalog.ddl import _morton_bits
 
     z = k.withColumn("zval", F.expr(_morton_bits("c", "d")))
 

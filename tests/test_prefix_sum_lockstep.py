@@ -2,10 +2,10 @@
 global-order statistical queries is a verified drop-in, not a
 docstring promise (r8 verdict item 7).
 
-``mann_whitney_u`` (queries/round8.py) and ``ks_two_sample``
-(queries/round8b.py) each keep ONE global-order stage — a rank /
-cumulative window with no PARTITION BY — justified by their bounded
-inputs (filtered two-group sample; distinct-value price grid). Both
+``mann_whitney_u`` and ``ks_two_sample`` (queries/stats/inference.py)
+each keep ONE global-order stage — a rank / cumulative window with no
+PARTITION BY — justified by their bounded inputs (filtered two-group
+sample; distinct-value price grid). Both
 docstrings name the swap for unbounded inputs: a range-partitioned
 prefix sum built on operators/ranking.py. These tests compose each
 statistic through ``range_prefix_sum`` and assert the outputs are

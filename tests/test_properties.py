@@ -375,7 +375,7 @@ def test_bounded_postings_equals_model(spark, pairs, max_df):
 
     from pyspark.sql import functions as F
 
-    from hdsp_hive_release_src_spark.queries.llm import (
+    from hdsp_hive_release_src_spark.operators.jaccard import (
         bounded_sorted_postings,
     )
 
@@ -411,9 +411,7 @@ def test_morton_interleave_roundtrip(spark, c, d):
     bijectivity is what makes z-ordering a valid layout key."""
     from pyspark.sql import functions as F
 
-    from hdsp_hive_release_src_spark.queries.engine_surface2 import (
-        _morton_bits,
-    )
+    from hdsp_hive_release_src_spark.queries.io_catalog.ddl import _morton_bits
 
     df = spark.createDataFrame([(c, d)], "c long, d long")
     z = df.select(F.expr(_morton_bits("c", "d")).alias("z"))

@@ -81,8 +81,8 @@ def test_kmv_set_operations_matches_python_replay(spark):
     pinned to the digit."""
     import pyarrow.parquet as pq
 
-    from hdsp_hive_release_src_spark.queries.llm10 import CMS_P
-    from hdsp_hive_release_src_spark.queries.round9j import (
+    from hdsp_hive_release_src_spark.functions.hashing import CMS_P
+    from hdsp_hive_release_src_spark.queries.stats.sketches import (
         KMV2_A,
         KMV2_B,
         KMV2_K,

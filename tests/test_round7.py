@@ -20,7 +20,7 @@ from tests.conftest import SF_ORACLE
 
 
 def test_cluster_by_layout(spark, sf_dir):
-    from hdsp_hive_release_src_spark.queries.round7 import (
+    from hdsp_hive_release_src_spark.queries.relational.sql import (
         cluster_by_clause,
     )
 
@@ -42,7 +42,7 @@ def test_cluster_by_layout(spark, sf_dir):
 
 
 def test_bm25_partitioning_invariant(spark, sf_dir):
-    from hdsp_hive_release_src_spark.queries.round7 import (
+    from hdsp_hive_release_src_spark.queries.text.corpus import (
         bm25_ranked_retrieval,
     )
 
@@ -57,7 +57,7 @@ def test_bm25_partitioning_invariant(spark, sf_dir):
 
 
 def test_distinct_set_algebra_identities(spark, sf_dir):
-    from hdsp_hive_release_src_spark.queries.round7 import (
+    from hdsp_hive_release_src_spark.queries.relational.sql import (
         distinct_set_algebra,
     )
 
@@ -69,7 +69,7 @@ def test_distinct_set_algebra_identities(spark, sf_dir):
 
 
 def test_boilerplate_bias_exact_integers(spark, sf_dir):
-    from hdsp_hive_release_src_spark.queries.round7 import (
+    from hdsp_hive_release_src_spark.queries.text.quality import (
         boilerplate_position_bias,
     )
 
@@ -82,7 +82,7 @@ def test_boilerplate_bias_exact_integers(spark, sf_dir):
 
 
 def test_crypto_roundtrip_invariants(spark, sf_dir):
-    from hdsp_hive_release_src_spark.queries.round7 import (
+    from hdsp_hive_release_src_spark.queries.builtin_functions.strings import (
         crypto_funcs_roundtrip,
     )
 
@@ -96,7 +96,7 @@ def test_crypto_roundtrip_invariants(spark, sf_dir):
 
 
 def test_explain_surface_pins_plan(spark, sf_dir):
-    from hdsp_hive_release_src_spark.queries.round7 import (
+    from hdsp_hive_release_src_spark.queries.io_catalog.ddl import (
         _PLAN_FEATURES,
         explain_plan_surface,
     )
@@ -113,7 +113,7 @@ def test_item_cooccurrence_nonvacuous_at_gate_scale(spark):
     oracle matched the empty set. The floor is now scale-aware — assert
     real signal at the exact gate scale so a future threshold bump
     can't go vacuous again."""
-    from hdsp_hive_release_src_spark.queries.llm9 import (
+    from hdsp_hive_release_src_spark.queries.stats.inference import (
         item_cooccurrence_support,
     )
 

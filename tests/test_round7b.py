@@ -54,7 +54,7 @@ def test_triangle_matches_naive(spark, sf_dir):
 
 
 def test_geo_assignment_is_map_side(spark, sf_dir):
-    from hdsp_hive_release_src_spark.queries.geo_suite import (
+    from hdsp_hive_release_src_spark.queries.vectors import (
         nearest_hub_assignment,
     )
 
@@ -67,9 +67,7 @@ def test_geo_assignment_is_map_side(spark, sf_dir):
 
 
 def test_geo_rings_cover_all_customers(spark, sf_dir):
-    from hdsp_hive_release_src_spark.queries.geo_suite import (
-        geo_haversine_rings,
-    )
+    from hdsp_hive_release_src_spark.queries.vectors import geo_haversine_rings
 
     from hdsp_hive_release_src_spark.catalog import Catalog
 
@@ -82,8 +80,8 @@ def test_geo_rings_cover_all_customers(spark, sf_dir):
 
 def test_rate_source_deterministic(spark, sf_dir):
     from hdsp_hive_release_src_spark.queries.streaming import (
-        stream_rate_source,
         _RATE_ROWS,
+        stream_rate_source,
     )
 
     rows = stream_rate_source(spark, sf_dir).collect()

@@ -17,7 +17,7 @@ def _load():
 
 
 def test_ivm_split_is_nontrivial_and_merge_exact(spark):
-    from hdsp_hive_release_src_spark.queries.round9aa import IVM_CUTOFF
+    from hdsp_hive_release_src_spark.queries.governance import IVM_CUTOFF
 
     o = spark.read.parquet(f"{SF}/orders.parquet")
     n_base = o.where(F.col("o_orderdate") < IVM_CUTOFF).count()
@@ -42,7 +42,7 @@ def test_ivm_split_is_nontrivial_and_merge_exact(spark):
 
 
 def test_erasure_cascade_conserves_rows(spark):
-    from hdsp_hive_release_src_spark.queries.round9aa import ERASE_MOD
+    from hdsp_hive_release_src_spark.queries.governance import ERASE_MOD
 
     rows = {
         r.tbl: r

@@ -17,7 +17,7 @@ def _load():
 
 
 def test_k_anonymity_accounting(spark):
-    from hdsp_hive_release_src_spark.queries.round9ab import KANON_K
+    from hdsp_hive_release_src_spark.queries.governance import KANON_K
 
     rows = sorted(
         registry.QUERIES["k_anonymity_audit"](spark, SF).collect(),

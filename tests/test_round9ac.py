@@ -19,7 +19,7 @@ def _load():
 
 
 def test_conformal_finite_sample_coverage_holds(spark):
-    from hdsp_hive_release_src_spark.queries.round9ac import (
+    from hdsp_hive_release_src_spark.queries.stats.inference import (
         CONF_LEVEL_PERMILLE,
     )
 
@@ -42,12 +42,15 @@ def test_conformal_finite_sample_coverage_holds(spark):
 
 
 def test_qte_matches_python_replay(spark):
-    from hdsp_hive_release_src_spark.queries.llm10 import CMS_P
-    from hdsp_hive_release_src_spark.queries.round9ac import (
+    from hdsp_hive_release_src_spark.functions.hashing import CMS_P
+    from hdsp_hive_release_src_spark.queries.stats.inference import (
         QTE_MOD,
         QTE_TAUS,
     )
-    from hdsp_hive_release_src_spark.queries.round9k import ATE_A, ATE_B
+    from hdsp_hive_release_src_spark.queries.stats.inference import (
+        ATE_A,
+        ATE_B,
+    )
 
     rows = {
         r.tau_permille: r

@@ -43,7 +43,7 @@ def test_soundex_oracle_formula_matches_spark_builtin(spark, duck):
     Spark's builtin on every probe name — this is the oracle's
     correctness proof, run on adversarial names the parquet corpus
     doesn't contain."""
-    from hdsp_hive_release_src_spark.queries.round9d import (
+    from hdsp_hive_release_src_spark.queries.text.corpus import (
         _SX_FROM,
         _SX_TO,
     )

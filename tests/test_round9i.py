@@ -131,9 +131,7 @@ def test_funnel_counts_match_python_regex(spark):
 
 
 def test_cosupply_capped_and_bounded(spark):
-    from hdsp_hive_release_src_spark.queries.round9i import (
-        COSUPPLY_MAX_DEGREE,
-    )
+    from hdsp_hive_release_src_spark.queries.graph import COSUPPLY_MAX_DEGREE
 
     rows = registry.QUERIES["cosupply_bipartite_projection"](
         spark, SF

@@ -48,9 +48,7 @@ def test_cohort_ltv_structure(spark):
 
 
 def test_kcore_peel_monotone_and_converged_flag(spark):
-    from hdsp_hive_release_src_spark.queries.round9j import (
-        KCORE_ROUNDS,
-    )
+    from hdsp_hive_release_src_spark.queries.graph import KCORE_ROUNDS
 
     rows = sorted(
         registry.QUERIES["kcore_peeling_profile"](spark, SF).collect(),
@@ -70,8 +68,8 @@ def test_kcore_peel_monotone_and_converged_flag(spark):
 def test_kmv_set_ops_match_python_replay(spark):
     """Replay the whole synopsis algebra exactly in Python on the
     sf0.001 id sets and compare every output field."""
-    from hdsp_hive_release_src_spark.queries.llm10 import CMS_P
-    from hdsp_hive_release_src_spark.queries.round9j import (
+    from hdsp_hive_release_src_spark.functions.hashing import CMS_P
+    from hdsp_hive_release_src_spark.queries.stats.sketches import (
         KMV2_A,
         KMV2_B,
         KMV2_K,

@@ -18,10 +18,7 @@ def _load():
 
 
 def test_ra_link_prediction_bounds_and_identity(spark):
-    from hdsp_hive_release_src_spark.queries.round9k import (
-        RA_DEG_CAP,
-        RA_TOP,
-    )
+    from hdsp_hive_release_src_spark.queries.graph import RA_DEG_CAP, RA_TOP
 
     rows = registry.QUERIES["ra_link_prediction"](spark, SF).collect()
     assert 1 <= len(rows) <= RA_TOP

@@ -20,7 +20,7 @@ def test_rake_matches_python_replay(spark):
     """Recompute the full RAKE pipeline in Python over the sf0.001
     English docs and compare the returned top-k exactly."""
     from hdsp_hive_release_src_spark.functions.text import STOPWORDS_EN
-    from hdsp_hive_release_src_spark.queries.round9l import (
+    from hdsp_hive_release_src_spark.queries.text.corpus import (
         RAKE_MAX_LEN,
         RAKE_MIN_LEN,
         RAKE_TOP,

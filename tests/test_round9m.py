@@ -32,7 +32,7 @@ def _daily_cents(spark):
 
 
 def test_vwap_rolling_weighting_identity(spark):
-    from hdsp_hive_release_src_spark.queries.round9m import TA_WIN
+    from hdsp_hive_release_src_spark.queries.events.timeseries import TA_WIN
 
     rows = sorted(
         registry.QUERIES["vwap_rolling"](spark, SF).collect(),
@@ -76,7 +76,7 @@ def test_drawdown_matches_python_replay(spark):
 
 
 def test_rsi_bounds_and_full_window_only(spark):
-    from hdsp_hive_release_src_spark.queries.round9m import TA_WIN
+    from hdsp_hive_release_src_spark.queries.events.timeseries import TA_WIN
 
     rows = registry.QUERIES["rsi_indicator"](spark, SF).collect()
     assert rows
@@ -94,7 +94,7 @@ def test_bollinger_breach_agrees_with_float_sigma(spark):
     """The integer squared comparison must agree with the float
     2-sigma test except exactly on the boundary (where float is
     undefined behaviour and integer is the spec)."""
-    from hdsp_hive_release_src_spark.queries.round9m import TA_WIN
+    from hdsp_hive_release_src_spark.queries.events.timeseries import TA_WIN
 
     rows = sorted(
         registry.QUERIES["bollinger_breach"](spark, SF).collect(),

@@ -57,7 +57,7 @@ def test_approx_top_k_is_exact_at_low_cardinality(spark):
 
 
 def test_scripting_loop_actually_ran(spark):
-    from hdsp_hive_release_src_spark.queries.round9n import SCRIPT_LOOPS
+    from hdsp_hive_release_src_spark.queries.io_catalog.ddl import SCRIPT_LOOPS
 
     rows = registry.QUERIES["sql_scripting_block"](spark, SF).collect()
     assert rows

@@ -20,7 +20,7 @@ def _load():
 
 
 def test_table_diff_counts_match_mod_rules(spark):
-    from hdsp_hive_release_src_spark.queries.round9o import (
+    from hdsp_hive_release_src_spark.queries.governance import (
         DIFF_ADD_MOD,
         DIFF_CHG_MOD,
         DIFF_DROP_MOD,

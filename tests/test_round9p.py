@@ -19,7 +19,7 @@ def _load():
 
 
 def test_kvlog_source_reads_one_partition_per_file(spark):
-    from hdsp_hive_release_src_spark.queries.round9p import (
+    from hdsp_hive_release_src_spark.sources.python_datasources import (
         KVLogReader,
     )
     from hdsp_hive_release_src_spark.sources.io import scratch_path

@@ -18,7 +18,9 @@ def _load():
 
 
 def test_python_stream_exactly_once_closed_form(spark):
-    from hdsp_hive_release_src_spark.queries.round9q import PYSTREAM_N
+    from hdsp_hive_release_src_spark.sources.python_datasources import (
+        PYSTREAM_N,
+    )
 
     rows = sorted(
         registry.QUERIES["python_datasource_stream"](

@@ -20,7 +20,7 @@ def _load():
 
 
 def test_two_phase_sink_commits_everything_exactly_once(spark):
-    from hdsp_hive_release_src_spark.queries.round9q import (
+    from hdsp_hive_release_src_spark.sources.python_datasources import (
         PYSTREAM_N,
         PYSTREAM_STEP,
     )

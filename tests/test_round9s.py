@@ -17,7 +17,7 @@ def _load():
 
 
 def test_with_ties_keeps_every_tying_row_and_no_global_window(spark):
-    from hdsp_hive_release_src_spark.queries.round9s import TIES_K
+    from hdsp_hive_release_src_spark.queries.relational.sql import TIES_K
 
     df = registry.QUERIES["fetch_with_ties_emulation"](spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()

@@ -51,7 +51,7 @@ def test_theta_set_algebra_is_exact_here(spark):
 
 
 def test_kll_exact_mode_matches_inclusive_rank_rule(spark):
-    from hdsp_hive_release_src_spark.queries.round9t import KLL_MOD
+    from hdsp_hive_release_src_spark.queries.stats.sketches import KLL_MOD
 
     rows = registry.QUERIES["kll_quantile_sketch_contract"](
         spark, SF

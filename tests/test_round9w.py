@@ -17,7 +17,9 @@ def _load():
 
 
 def test_regr_family_matches_exact_moment_replay(spark):
-    from hdsp_hive_release_src_spark.queries.round9w import REGR_MOD
+    from hdsp_hive_release_src_spark.queries.builtin_functions.numeric import (
+        REGR_MOD,
+    )
 
     row = registry.QUERIES["regr_full_family"](spark, SF).collect()[0]
     sample = (

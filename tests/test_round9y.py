@@ -17,7 +17,9 @@ def _load():
 
 
 def test_st_wkb_roundtrip_is_byte_identical(spark):
-    from hdsp_hive_release_src_spark.queries.round9y import WKB_POINTS
+    from hdsp_hive_release_src_spark.queries.builtin_functions.numeric import (
+        WKB_POINTS,
+    )
 
     row = registry.QUERIES["st_wkb_surface"](spark, SF).collect()[0]
     for i, w in enumerate(WKB_POINTS):

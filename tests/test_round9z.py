@@ -25,7 +25,7 @@ def _load():
 
 
 def test_zorder_blocks_match_python_morton(spark):
-    from hdsp_hive_release_src_spark.queries.round9z import (
+    from hdsp_hive_release_src_spark.queries.io_catalog.ddl import (
         Z_BITS,
         Z_BLOCK_SHIFT,
     )

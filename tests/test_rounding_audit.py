@@ -111,9 +111,10 @@ def test_no_float_image_rounds():
 def test_float_image_scan_covers_engine_sources(tmp_path):
     """The convention binds the implementation as well as the oracle: a
     compliant oracle does not make an engine-side
-    F.round(F.sum(<decimal>).cast("double"), k) safe. A planted site in
-    a scanned source directory must be reported; the safe spellings
-    (round the exact sum, then cast; integer sums) must not."""
+    F.round(F.sum(<decimal>).cast("double"), k) safe. A planted site
+    anywhere under the scanned source directory, subpackages included,
+    must be reported; the safe spellings (round the exact sum, then
+    cast; integer sums) must not."""
     from tools.audit_rounding import float_image_rounds
 
     (tmp_path / "planted.py").write_text(
@@ -121,6 +122,12 @@ def test_float_image_scan_covers_engine_sources(tmp_path):
         'b = F.round(F.sum("rev"), 2).cast("double")\n'
         'c = F.round(F.sum(F.col("n").cast("bigint")).cast("double"), 2)\n'
     )
+    # a site in a subpackage (a domain subpackage, operators/) counts too
+    (tmp_path / "domain").mkdir()
+    (tmp_path / "domain" / "nested.py").write_text(
+        'd = F.round(F.sum("amt").cast("double"), 2)\n'
+    )
     assert float_image_rounds(tmp_path) == {
-        f"{tmp_path.name}/planted.py": ['f.sum("rev").cast("double")']
+        f"{tmp_path.name}/planted.py": ['f.sum("rev").cast("double")'],
+        f"{tmp_path.name}/domain/nested.py": ['f.sum("amt").cast("double")'],
     }

@@ -93,7 +93,7 @@ def test_heavy_hitters_plan_shape(spark, sf_dir):
     from hdsp_hive_release_src_spark.operators.sketches import (
         mg_candidates,
     )
-    from hdsp_hive_release_src_spark.queries.llm9 import HH_DEN
+    from hdsp_hive_release_src_spark.queries.text.corpus import HH_DEN
 
     d = Catalog(spark, sf_dir).documents
     vals = d.select(

@@ -24,10 +24,11 @@ sites and classifies each:
 
 Float-class queries must either pass the fuzz or be restructured
 (deterministic fold / exact arithmetic / tolerance oracle — see
-llm8.py's dsir fix for the pattern). Results land in
-``tools/ROUNDING_AUDIT.json``; tests/test_rounding_audit.py fails if
-a new float-class round site appears that is not in the committed
-audit, so the class cannot silently grow.
+dsir_importance_weights in queries/text/quality.py for the pattern).
+Results land in ``tools/ROUNDING_AUDIT.json``;
+tests/test_rounding_audit.py fails if a new float-class round site
+appears that is not in the committed audit, so the class cannot
+silently grow.
 
 Usage::
 
@@ -175,7 +176,7 @@ _FLOAT_IMAGE_RE = re.compile(
     r"(?:[\"']double[\"']|doubletype\s*\(\s*\))\s*\)$",
     re.DOTALL,
 )
-QUERIES_DIR = REPO / "hdsp_hive_release_src_spark" / "queries"
+PACKAGE_DIR = REPO / "hdsp_hive_release_src_spark"
 
 
 def _float_image_sites(text: str) -> list[str]:
@@ -191,11 +192,12 @@ def _float_image_sites(text: str) -> list[str]:
     return out
 
 
-def float_image_rounds(src_dir: Path = QUERIES_DIR) -> dict[str, list[str]]:
+def float_image_rounds(src_dir: Path = PACKAGE_DIR) -> dict[str, list[str]]:
     """Float-image round sites in every oracle (keyed by query name)
-    AND in the engine sources under ``src_dir`` (keyed by file): a
-    compliant oracle does not make a non-compliant implementation
-    safe — either side alone diverges at a half-boundary."""
+    AND in every engine source under ``src_dir``, subpackages included
+    (keyed by path): a compliant oracle does not make a non-compliant
+    implementation safe — either side alone diverges at a
+    half-boundary."""
     from hdsp_hive_release_src_spark import registry
 
     registry.load_all()
@@ -203,9 +205,9 @@ def float_image_rounds(src_dir: Path = QUERIES_DIR) -> dict[str, list[str]]:
     for name, sql in registry.ORACLES.items():
         if sites := _float_image_sites(sql):
             hits[name] = sites
-    for path in sorted(src_dir.glob("*.py")):
+    for path in sorted(src_dir.rglob("*.py")):
         if sites := _float_image_sites(path.read_text()):
-            hits[f"{src_dir.name}/{path.name}"] = sites
+            hits[f"{src_dir.name}/{path.relative_to(src_dir)}"] = sites
     return hits
 
 

@@ -305,60 +305,58 @@ OVERRIDES: dict[str, tuple[str, str]] = {
     ),
 }
 
-# Module-level default categories for everything else.
+# Names whose category differs from their domain module's default
+# below; each takes its category's default reason.
+_CATEGORY_OVERRIDES: dict[str, str] = {
+    "builtin-parity": "group_order_by_all identifier_clause"
+    " lateral_column_alias parameterized_query sql_session_variables"
+    " star_syntax_variants table_sample_bucket table_sample_percent_rows"
+    " values_inline_table",
+    "ddl-catalog": "char_varchar_semantics from_csv_expressions"
+    " group_ordinal_having inline_explode json_tuple"
+    " limit_offset_pagination nested_struct_json null_ordering"
+    " null_partition_handling parquet_bloom_filter_write"
+    " parquet_schema_merge reflect_java_method schema_evolution_union"
+    " sequence_generate_series text_source_options udaf_register"
+    " udtf_lateral xpath_extract",
+    "engine-contract": "analyze_column_stats analyze_table_stats"
+    " cache_table_reuse cluster_by_clause ctas_catalog explain_cbo_stats"
+    " explain_plan_surface join_hint_strategies json_corrupt_record"
+    " multichar_delim_csv multiline_json_source observed_load_metrics"
+    " rebalance_hint_partitioning script_transform"
+    " show_columns_views_surface show_functions_surface sql_over_views"
+    " sql_scripting_block sql_table_function sql_udf_registration"
+    " transform_using_script udtf_python_lateral zorder_interleave",
+    "pandas-engine": "arrays_zip_explode explode_outer_empty"
+    " python_datasource_kvlog",
+    "relational-parity": "array_set_ops grouping_id_agg"
+    " json_schema_inference materialized_view_rewrite mv_auto_rewrite"
+    " nested_types_roundtrip sql_scalar_macro",
+}
+for _cat, _names in _CATEGORY_OVERRIDES.items():
+    OVERRIDES.update((n, (_cat, "")) for n in _names.split())
+for _n in (
+    "python_datasource_stream",
+    "python_datasource_stream_sink",
+    "python_datasource_writer",
+):
+    OVERRIDES[_n] = ("engine-contract", "Python DataSource API plumbing")
+
+# Default categories by domain module (path under queries/) for
+# everything else.
 MODULE_DEFAULTS: dict[str, tuple[str, str]] = {
-    "functions_suite": ("builtin-parity", ""),
-    "functions_suite2": ("builtin-parity", ""),
-    "functions_suite3": ("builtin-parity", ""),
-    "functions_suite4": ("builtin-parity", ""),
-    "functions_suite5": ("builtin-parity", ""),
-    "functions_suite6": ("builtin-parity", ""),
-    "functions_suite7": ("builtin-parity", ""),
-    "functions_suite8": ("builtin-parity", ""),
-    "functions_suite9": ("builtin-parity", ""),
-    "math_datetime_suite": ("builtin-parity", ""),
-    "extras2": ("builtin-parity", ""),
-    "modern_surface": ("builtin-parity", ""),
-    "modern_surface2": ("builtin-parity", ""),
-    "modern_surface3": ("builtin-parity", ""),
-    "modern_surface4": ("builtin-parity", ""),
-    "round9v": ("builtin-parity", ""),
-    "round9w": ("builtin-parity", ""),
-    "geo_suite": ("builtin-parity", ""),
-    "hive_surface": ("builtin-parity", ""),
-    "analytics": ("relational-parity", ""),
-    "analytics2": ("relational-parity", ""),
-    "analytics3": ("relational-parity", ""),
-    "etl_surface": ("relational-parity", ""),
-    "events2": ("relational-parity", ""),
-    "governance_surface": ("relational-parity", ""),
-    "warehouse_surface": ("relational-parity", ""),
-    "olap_surface": ("relational-parity", ""),
-    "round9i": ("relational-parity", ""),
-    "round9o": ("relational-parity", ""),
-    "llm9": ("relational-parity", ""),
-    "llm4": ("relational-parity", ""),
-    "llm7": ("relational-parity", ""),
-    "multimodal2": ("relational-parity", ""),
-    "catalog_surface": ("ddl-catalog", ""),
-    "schema_surface": ("ddl-catalog", ""),
-    "hive_gaps": ("ddl-catalog", ""),
-    "round9": ("ddl-catalog", ""),
-    "engine_surface": ("engine-contract", ""),
-    "engine_surface2": ("engine-contract", ""),
-    "round7": ("engine-contract", ""),
-    "round8": ("engine-contract", ""),
-    "round9d": ("engine-contract", ""),
-    "round9n": ("engine-contract", ""),
-    "sources": ("io-roundtrip", ""),
-    "round9e": ("io-roundtrip", ""),
-    "round9f": ("io-roundtrip", ""),
+    "builtin_functions.collections": ("builtin-parity", ""),
+    "builtin_functions.dates": ("builtin-parity", ""),
+    "builtin_functions.numeric": ("builtin-parity", ""),
+    "builtin_functions.strings": ("builtin-parity", ""),
+    "builtin_functions.udfs": ("pandas-engine", ""),
+    "events.sessions": ("builtin-parity", ""),
+    "governance": ("relational-parity", ""),
+    "io_catalog.ddl": ("ddl-catalog", ""),
+    "io_catalog.formats": ("io-roundtrip", ""),
+    "olap": ("builtin-parity", ""),
+    "relational.sql": ("relational-parity", ""),
     "streaming": ("streaming-emit-contract", ""),
-    "udf_surface": ("pandas-engine", ""),
-    "round9p": ("pandas-engine", ""),
-    "round9q": ("engine-contract", "Python DataSource API plumbing"),
-    "round9r": ("engine-contract", "Python DataSource API plumbing"),
-    "llm": ("relational-parity", ""),
 }
 
 DEFAULT_REASONS = {
@@ -395,9 +393,11 @@ def classify() -> dict[str, dict]:
         if name in OVERRIDES:
             cat, reason = OVERRIDES[name]
             out[name] = {"status": "exempt", "category": cat,
-                         "reason": reason}
+                         "reason": reason or DEFAULT_REASONS[cat]}
             continue
-        mod = registry.QUERIES[name].__module__.rsplit(".", 1)[-1]
+        mod = registry.QUERIES[name].__module__.removeprefix(
+            "hdsp_hive_release_src_spark.queries."
+        )
         if mod in MODULE_DEFAULTS:
             cat, reason = MODULE_DEFAULTS[mod]
             out[name] = {
