@@ -63,10 +63,10 @@ from pyspark.sql import functions as F
 _MAX_ROUNDS = 64
 
 #: Observability: realized round count of the most recent
-#: connected_components_star call in this process. bench.py emits it
-#: in the stress JSON so a convergence regression (e.g. a
-#: canonicalization bug doubling rounds) is visible in-band rather
-#: than only as wall-clock.
+#: connected_components_star call in this process. perfbench's traced
+#: runs read it as ``operators.star_rounds``, so a convergence
+#: regression (e.g. a canonicalization bug doubling rounds) shows as a
+#: count rather than only as wall-clock.
 LAST_RUN_ROUNDS: int | None = None
 
 

@@ -373,13 +373,14 @@ def heavy_hitters_tokens_with_den(
     spark: SparkSession, sf_dir: str, den: int
 ) -> DataFrame:
     """The heavy_hitters_topk plan with a caller-chosen exact-rational
-    threshold (frequency > N/den). The bench's 10× stress tier uses
-    den=400 (ε = 0.25%): make_stress keeps replica 0's text verbatim
-    and suffixes replicas 1-9, so every token variant lands at
-    base_frac/10 ≈ 0.34% max — below the production 2% ε, which made
-    the r8 stress datapoint return 0 rows and leave the candidate
-    recount path unmeasured. Same two-pass MG plan, only the summary
-    size (O(den) per partition) changes."""
+    threshold (frequency > N/den). perfbench's 10× workloads use
+    den=400 (ε = 0.25%, ``perfbench/workloads.py::overrides``):
+    make_stress keeps replica 0's text verbatim and suffixes replicas
+    1-9, so every token variant lands at base_frac/10 ≈ 0.34% max —
+    below the production 2% ε, which made the r8 stress datapoint
+    return 0 rows and leave the candidate recount path unmeasured.
+    Same two-pass MG plan, only the summary size (O(den) per partition)
+    changes."""
     d = Catalog(spark, sf_dir).documents
     tok = d.select(
         F.explode(

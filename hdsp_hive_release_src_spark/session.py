@@ -13,33 +13,28 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _default_driver_mem(floor_gib: int = 4) -> str:
-    """Half of MemAvailable, clamped to [floor_gib, 24g] — enough heap
+def _default_driver_mem() -> str:
+    """Half of MemAvailable, clamped to [4g, 24g] — enough heap
     that 32 concurrent local tasks don't GC-thrash, without requesting
     more than the host can grant (a fixed 24g fails JVM launch on
     small boxes; the grading driver builds its own session, so this
-    only governs local runs). Benchmarks pass a higher floor
-    (``bench_driver_mem``): on a box under concurrent load, halving a
-    momentarily-low MemAvailable reintroduces the GC-pause wall-clock
-    noise the big heap exists to remove — so bench runs prefer a
-    12g+ heap and only back off when the host truly cannot grant it
-    (never above MemAvailable - 2 GiB)."""
+    only governs local runs)."""
     try:
         with open("/proc/meminfo") as fh:
             for line in fh:
                 if line.startswith("MemAvailable:"):
                     avail_gib = int(line.split()[1]) // (1024 * 1024)
-                    want = max(floor_gib, min(24, avail_gib // 2))
-                    grantable = max(4, avail_gib - 2)
-                    return f"{min(want, grantable)}g"
+                    return f"{max(4, min(24, avail_gib // 2))}g"
     except OSError:
         pass
     return "8g"
 
 
-def bench_driver_mem() -> str:
-    """Heap for benchmark runs: 12g floor (see _default_driver_mem)."""
-    return _default_driver_mem(floor_gib=12)
+def core_count() -> int:
+    """Cores the engine sizes itself to: ``SPARK_GRAFT_CPUS`` when it is
+    a number, else the host's."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
+    return int(cpus) if cpus.isdigit() else (os.cpu_count() or 16)
 
 
 def _default_shuffle_partitions() -> int:
@@ -49,14 +44,18 @@ def _default_shuffle_partitions() -> int:
     schedules 4 waves of tiny tasks per exchange (measured at sf0.1 /
     8 cores: noop headline total ~15% slower, the fixed-size
     calibration probe ~35% slower, than with 16). At 32 cores this
-    still resolves to 32, so the bench series is unchanged on the
-    reference box. This is only the INITIAL partition count — AQE
-    coalescing (on) sizes post-shuffle partitions by bytes either
-    way; a cluster deployment overrides via SPARK_GRAFT_SHUFFLE
+    still resolves to the old 32. This is only the INITIAL partition
+    count — AQE coalescing (on) sizes post-shuffle partitions by bytes
+    either way; a cluster deployment overrides via SPARK_GRAFT_SHUFFLE
     (sized to executors × cores, see SURVEY §4)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-    n = int(cpus) if cpus.isdigit() else (os.cpu_count() or 16)
-    return max(16, n)
+    return max(16, core_count())
+
+
+def batch_shuffle_partitions() -> int:
+    """Batch shuffle partitions: the ``SPARK_GRAFT_SHUFFLE`` override
+    when set, else ``_default_shuffle_partitions()``."""
+    env = os.environ.get("SPARK_GRAFT_SHUFFLE")
+    return int(env) if env else _default_shuffle_partitions()
 
 
 def get_spark(
@@ -69,10 +68,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        env = os.environ.get("SPARK_GRAFT_SHUFFLE")
-        shuffle_partitions = (
-            int(env) if env else _default_shuffle_partitions()
-        )
+        shuffle_partitions = batch_shuffle_partitions()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -111,7 +107,8 @@ def get_spark(
         # intermittent 10× CPU-bound slow shots (bench shot_diag r15:
         # a 21.4 s jaccard shot burned 555 CPU-seconds vs ~55 warm, at
         # full parallelism, flat GC, no JIT burst). 512m costs nothing
-        # at the 12g+ heaps this repo runs and removes the ceiling.
+        # beside the multi-GB heaps this repo runs and removes the
+        # ceiling.
         # Applies only when THIS call launches the JVM (first session
         # in the process — true for bench/sweeps/tests; a foreign
         # driver session keeps its own opts). r16 (r15 ADVICE): a
@@ -187,9 +184,7 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     which is pure scheduling overhead at test scale."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("SPARK_GRAFT_SHUFFLE")
-        or str(_default_shuffle_partitions()),
+        "spark.sql.shuffle.partitions", str(batch_shuffle_partitions())
     )
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     # naive parquet timestamps must read as TIMESTAMP (UTC), not NTZ —

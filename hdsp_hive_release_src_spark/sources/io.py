@@ -13,7 +13,10 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 SCRATCH = Path(
-    os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/_scratch")
+    os.environ.get(
+        "SPARK_GRAFT_SCRATCH",
+        Path(__file__).resolve().parents[2] / "_scratch",
+    )
 )
 
 

@@ -22,6 +22,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hdsp_hive_release_src_spark.session import core_count
+
 _COUNTER = itertools.count()
 
 
@@ -46,9 +48,7 @@ def state_shuffle_partitions() -> int:
     env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
     if env:
         return int(env)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "")
-    n = int(cpus) if cpus.isdigit() else (os.cpu_count() or 16)
-    return max(4, min(n // 4, 32))
+    return max(4, min(core_count() // 4, 32))
 
 
 @contextmanager

@@ -11,6 +11,9 @@ from __future__ import annotations
 import shutil
 import subprocess
 import sys
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
 
 SCRIPT = r"""
 import sys
@@ -55,13 +58,13 @@ print("HIVE_CATALOG_OK", expected, provider)
 
 
 def test_hive_metastore_end_to_end():
-    meta = "/root/repo/_scratch/hive_meta_test"
+    meta = str(REPO / "_scratch" / "hive_meta_test")
     shutil.rmtree(meta, ignore_errors=True)
     r = subprocess.run(
         [sys.executable, "-c", SCRIPT, meta],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=REPO,
         timeout=300,
     )
     assert "HIVE_CATALOG_OK" in r.stdout, (r.stdout[-2000:], r.stderr[-2000:])

@@ -90,11 +90,12 @@ def test_zorder_layout_clusters_both_dimensions(spark):
         ).alias("d"),
     )
     from hdsp_hive_release_src_spark.queries.io_catalog.ddl import _morton_bits
+    from hdsp_hive_release_src_spark.sources.io import SCRATCH
 
     z = k.withColumn("zval", F.expr(_morton_bits("c", "d")))
 
     def avg_spans(df, sort_col):
-        path = f"/root/repo/_scratch/zorder_test_{sort_col}"
+        path = str(SCRATCH / f"zorder_test_{sort_col}")
         shutil.rmtree(path, ignore_errors=True)
         (
             df.repartitionByRange(8, F.col(sort_col))

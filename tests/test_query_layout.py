@@ -1,7 +1,8 @@
 """Layout guards for the query package: one module per domain, found by
 discovery, with every shared primitive in one home outside
-``queries/``. Spark-free: the AST checks read sources, and the
-import-order check only imports modules in child interpreters."""
+``queries/``, and the benchmark's import shims holding one name each.
+Spark-free: the AST checks read sources, and the import-order check
+only imports modules in child interpreters."""
 
 from __future__ import annotations
 
@@ -17,10 +18,17 @@ PKG_DIR = REPO / "hdsp_hive_release_src_spark"
 QUERIES_DIR = PKG_DIR / "queries"
 QUERIES_PKG = "hdsp_hive_release_src_spark.queries"
 
-# perfbench/workloads.py imports heavy_hitters_tokens_with_den from this
-# path, and the benchmark's files are outside this package's reach: the
-# module re-exports it from queries/text/corpus.py and registers nothing.
+# perfbench imports one name from each of these paths, and the
+# benchmark's files are outside this package's reach: each file keeps
+# that name (llm9.py re-exports it from queries/text/corpus.py) and
+# registers and runs nothing.
 BENCHMARK_IMPORT_PATH = QUERIES_DIR / "llm9.py"
+PERFBENCH_SHIMS = {
+    BENCHMARK_IMPORT_PATH: "heavy_hitters_tokens_with_den",
+    REPO / "bench.py": "_diag_counters",
+}
+# the one test of bench._diag_counters
+BENCH_IMPORTER = REPO / "tests" / "test_session.py"
 
 _WAVE_NAME = re.compile(r"^(round.*|llm\d.*|.*suite.*)\.py$")
 
@@ -81,6 +89,51 @@ def test_load_all_keeps_no_module_list():
         if a.name != "queries"
     ]
     assert not listed, f"load_all imports query modules by name: {listed}"
+
+
+def _shim_names(tree: ast.Module) -> list[str]:
+    """Top-level names a shim binds, other than whole-module imports and
+    ``from __future__``; any other kind of statement (a registration, a
+    ``__main__`` block) is reported by its node type."""
+    out = []
+    for node in tree.body[1:] if ast.get_docstring(tree) else tree.body:
+        if isinstance(node, ast.FunctionDef):
+            out.append(node.name)
+        elif isinstance(node, ast.ImportFrom):
+            if node.module != "__future__":
+                out += [a.asname or a.name for a in node.names]
+        elif not isinstance(node, ast.Import):
+            out.append(type(node).__name__)
+    return out
+
+
+def test_perfbench_shims_hold_only_the_imported_name():
+    extra = {
+        str(path.relative_to(REPO)): names
+        for path, name in PERFBENCH_SHIMS.items()
+        if (names := _shim_names(ast.parse(path.read_text()))) != [name]
+    }
+    assert not extra, f"perfbench shims defining more than one name: {extra}"
+
+
+def _bench_imports(tree: ast.AST) -> list[str]:
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "bench":
+            out += [a.name for a in node.names]
+        elif isinstance(node, ast.Import):
+            out += [a.name for a in node.names if a.name == "bench"]
+    return out
+
+
+def test_only_the_counter_test_imports_bench():
+    importers = {
+        path: names
+        for root in (PKG_DIR, REPO / "tools", REPO / "tests")
+        for path in root.rglob("*.py")
+        if (names := _bench_imports(ast.parse(path.read_text())))
+    }
+    assert importers == {BENCH_IMPORTER: ["_diag_counters"]}, importers
 
 
 _DUMP = """

@@ -3,8 +3,29 @@ pruning, connector stubs."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
+
+REPO = Path(__file__).resolve().parent.parent
+
+
+def test_scratch_defaults_under_own_checkout():
+    """With ``SPARK_GRAFT_SCRATCH`` unset, a fresh interpreter places
+    scratch under the checkout it imports the package from, so two
+    checkouts never write into one scratch directory."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_SCRATCH"}
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from hdsp_hive_release_src_spark.sources import io; "
+         "print(io.SCRATCH)"],
+        cwd=REPO, env=env, capture_output=True, text=True, check=True,
+    )
+    assert Path(out.stdout.strip()) == REPO / "_scratch"
 
 
 def test_partitioned_sink_prunes_partitions(spark, sf_dir):
@@ -51,9 +72,11 @@ def test_avro_datasource_really_absent(spark):
     avro_roundtrip should be promoted to a real query."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
+    from hdsp_hive_release_src_spark.sources.io import SCRATCH
+
     with pytest.raises(AnalysisException, match="avro"):
         spark.range(1).write.mode("overwrite").format("avro").save(
-            "/root/repo/_scratch/avro_probe"
+            str(SCRATCH / "avro_probe")
         )
 
 

@@ -17,13 +17,14 @@ with query code untouched — the unpinned write layout was the only
 changed input). Every table is hash-repartitioned on its primary id
 into exactly N_FILES output files, so (a) two builds from the same
 source place the same rows in the same files, and (b) the scan
-parallelism the stress tier sees never silently drops (the r13
+parallelism the 10x workloads see never silently drops (the r13
 rebuild produced 10 files per table — one per union branch — which
 underparallelizes a 32-thread local run; the ~600 KB documents files
 additionally pack into even fewer tasks via
 spark.sql.files.openCostInBytes). Per-table {files, rows, bytes} is
-written to ``_LAYOUT.json`` in the destination; bench.py embeds it in
-the BENCH record so any future layout drift is visible in-band.
+written to ``_LAYOUT.json`` in the destination; perfbench records its
+hash in every run's environment block, so any layout drift shows in
+the record.
 
 Usage: python tools/make_stress.py [src_sf_dir] [dst_dir] [n_replicas]
 Defaults: /root/testdata/sf0.1 → <repo>/_scratch/stress10x, 10.
