@@ -158,8 +158,10 @@ def connected_components_star(
         # round number (observed: 6 s → 11 s per round by round 3 on
         # a 60-node chain). Checkpointing truncates the lineage to
         # the materialized partitions, so each round plans against a
-        # flat scan; superseded round storage is freed by the
-        # ContextCleaner once unreferenced.
+        # flat scan. Superseded round checkpoints stay stored until
+        # the query boundary releases them (operators/materialize.py):
+        # the ContextCleaner was measured freeing none of them, even
+        # after gc.collect(), System.gc() and 10 s of waiting.
         nxt = _small_star(_large_star(e)).localCheckpoint(eager=True)
         # (count, xor-of-hashes): order-insensitive, overflow-free
         # under ANSI (a 64-bit SUM of hashes overflows), exact on a

@@ -51,26 +51,15 @@ def kmeans(
     vec_col: str = "v",
     k: int = 20,
     iterations: int = 3,
-    finalize: "object | None" = None,
 ) -> DataFrame:
     """Return (id_col, cluster) assignments after ``iterations`` Lloyd
     rounds, seeded with the ``k`` rows whose md5-hashed id sorts first
     (cid = rank in that hash order).
 
-    ``finalize``: optional ``DataFrame -> DataFrame`` reduction the
-    caller would apply to the assignments (e.g. per-cluster counts).
-    When given, the reduced result is eagerly localCheckpointed INSIDE
-    the operator — reading the input cache once — and the corpus-sized
-    DISK_ONLY cache is released before returning, so the operator
-    leaks nothing for the life of the session while keeping exactly
-    one executed corpus scan (the pinned count). Without it, the cache
-    is released at return and the final assignment read recomputes
-    from lineage (DISK_ONLY retains it) — one extra pruned scan PER
-    ACTION on the returned frame, still no session-lifetime leak (r13
-    advice). A consumer that will act on the assignments repeatedly
-    should pass a finalize (checkpointed once) or persist the returned
-    frame itself rather than pay the recompute each time (r14
-    advice)."""
+    The assignments are returned lazily over the corpus input cache,
+    which lives to the query boundary (operators/materialize.py): the
+    seed collect, the centroid collects and the consumer's action all
+    read it — one executed corpus scan."""
     # r13 subtree-audit fix: the seed collect, each iteration's
     # centroid-update collect and the final assignment each re-ran the
     # input lineage from parquet (4 executed corpus scans measured for
@@ -116,21 +105,6 @@ def kmeans(
             .collect()
         )
         centroids = [(r.cid, list(r.c)) for r in new_cent]
-    out = assign.select(
+    return assign.select(
         F.col("vid").alias(id_col), F.col("cid").alias("cluster")
     )
-    if finalize is not None:
-        # build the caller's reduced result off the cache (one read),
-        # cut its lineage so nothing downstream references n, then
-        # release the corpus cache — zero session-lifetime leak at the
-        # pinned single executed corpus scan. The shared helper guards
-        # the tier (a row-per-corpus finalize result must never
-        # localCheckpoint — it is returned lazily with the cache kept)
-        # and honors the test-only SPARK_GRAFT_KEEP_PLAN bypass.
-        from hdsp_hive_release_src_spark.operators.materialize import (
-            checkpoint_reduced_and_release,
-        )
-
-        return checkpoint_reduced_and_release(finalize(out), n)
-    n.unpersist(blocking=False)
-    return out

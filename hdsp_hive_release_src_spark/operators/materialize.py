@@ -28,13 +28,27 @@ Runtime truth for both tiers is pinned by
 tests/test_scan_counts.py::test_runtime_fact_scans_pinned via
 plans/runtime.py (executed-scan counting — plan-leaf pins cannot see
 scans that run at build time behind a checkpoint).
+
+Lifecycle — one rule, one release point: every cache and checkpoint a
+query makes (either tier here, and every raw ``localCheckpoint`` or
+``persist`` in a query body) lives until the registry's query
+boundary, ``flush_pending_releases``, and no longer. Nothing releases
+inside a query: a query returns its frame lazily, the consumer's
+action reads the materializations the build made (one executed scan
+per materialized input), and the boundary drops them all. The
+registry wrapper runs the boundary when the NEXT registered query is
+called; every harness runs call → collect → call next, so the
+boundary always falls after the previous consumer's action. Failure
+mode: a frame acted on AFTER a later registered call has run reads
+released blocks — a checkpoint leaf fails loudly ("Checkpoint block
+not found"), a persist silently recomputes from lineage. Never build
+query B before collecting query A in one session.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame
+from pyspark import SparkContext
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 
@@ -44,41 +58,21 @@ def persist_fact_rows(df: DataFrame) -> DataFrame:
     return df.persist(StorageLevel.DISK_ONLY)
 
 
-# ---------------------------------------------------------------------------
-# Deferred cache release (r16, r15 verdict item 5): a query whose
-# RESULT is row-per-input cannot release its fact-tier input cache at
-# return without forcing the consumer's action to recompute the input
-# (the r15 release-at-return trade: window_ntile / quantile_normalize
-# executed their pruned scan twice), and cannot keep it without a
-# session-lifetime leak (the r14 class). The missing lifecycle point
-# is "after the CONSUMER's collect" — which the query function never
-# sees. defer_release() parks the release; every harness entry point
-# (the registry's query wrapper, so the driver/bench/sweep loops flush
-# the PREVIOUS query's caches when they call the next one) flushes the
-# queue. Net: the driver-collected plan reads the one materialization
-# (single executed scan, counts/offsets and output rows consistent by
-# construction), and zero caches survive a query boundary.
-_PENDING_RELEASES: list = []
-
-
-def defer_release(release) -> None:
-    """Park a zero-arg cache release until the next query-boundary
-    flush (see block comment). Idempotent releases only — a flush may
-    run after clearCache/session teardown already dropped the cache."""
-    _PENDING_RELEASES.append(release)
-
-
 def flush_pending_releases() -> int:
-    """Run every parked release (fail-soft per item: a release against
-    a torn-down SparkContext must not break the next query) and return
-    how many were flushed."""
-    n = len(_PENDING_RELEASES)
-    while _PENDING_RELEASES:
-        release = _PENDING_RELEASES.pop()
-        try:
-            release()
-        except Exception:
-            pass  # dead context / already-unpersisted — nothing to drop
+    """The query boundary (module docstring): drop every cached table,
+    then unpersist every RDD the SparkContext still holds — the
+    localCheckpoint blocks included, which no catalog call reaches —
+    and forget the registered checkpoints. Returns how many persistent
+    RDDs the boundary released; 0 without an active SparkContext."""
+    if SparkContext._active_spark_context is None:
+        return 0
+    spark = SparkSession.active()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    n = persistent().size()
+    spark.catalog.clearCache()
+    for rdd in list(persistent().values()):
+        rdd.unpersist(False)
+    _REDUCED_CHECKPOINT_RDD_IDS.clear()
     return n
 
 
@@ -152,7 +146,9 @@ _REDUCED_LEAVES = frozenset(
 # of a small table, never a fact-row localCheckpoint. Keys are
 # (applicationId, rdd_id): RDD ids restart from 0 with a new
 # SparkContext, so a bare id registered in a dead context could bless
-# an arbitrary RDD in its successor.
+# an arbitrary RDD in its successor. The query boundary
+# (flush_pending_releases) releases every checkpoint and empties the
+# set, so it holds one query's checkpoints at most.
 _REDUCED_CHECKPOINT_RDD_IDS: set[tuple[str, int]] = set()
 
 
@@ -169,15 +165,7 @@ def _register_if_checkpoint(df: DataFrame) -> DataFrame:
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
         if plan.getClass().getSimpleName() == "LogicalRDD":
-            key = _checkpoint_key(plan)
-            # r16 (r15 ADVICE): keys from dead applications can never
-            # match again (the applicationId is part of the key) —
-            # drop them here so the registry is bounded by one app's
-            # live checkpoints instead of growing for the process life
-            _REDUCED_CHECKPOINT_RDD_IDS.difference_update(
-                {k for k in _REDUCED_CHECKPOINT_RDD_IDS if k[0] != key[0]}
-            )
-            _REDUCED_CHECKPOINT_RDD_IDS.add(key)
+            _REDUCED_CHECKPOINT_RDD_IDS.add(_checkpoint_key(plan))
     except Exception:
         pass  # unregistered ⇒ later classifications take the safe tier
     return df
@@ -230,65 +218,23 @@ def is_reduced_rooted(df: DataFrame) -> bool:
         return False
 
 
-def checkpoint_reduced_and_release(
-    out: DataFrame, *caches
-) -> DataFrame:
-    """Close a query-local persist leak: eagerly localCheckpoint a
-    REDUCED final result (guarded by is_reduced_rooted — the plan must
-    prove it; fact-row frames never localCheckpoint), then release the
-    persist-tier ``caches`` the computation consumed (each a persisted
-    DataFrame, or a zero-arg release callable for tiers where
-    unpersist needs a guard). Executed-scan counts are unchanged: the
-    checkpoint build reads the caches, which the query's collects
-    already built. If ``out`` is not provably reduced, it is returned
-    lazily and the caches are KEPT — dropping them would make the
-    final read re-execute the upstream (the safe default; the caller
-    documents the retained cache instead).
-
-    TEST-ONLY bypass: ``SPARK_GRAFT_KEEP_PLAN=1`` skips the checkpoint
-    (and the release) so plan-shape tests can assert the INNER plan —
-    window partitioning, cache-build scan counts — that the checkpoint
-    leaf would otherwise hide. Production never sets it."""
-    if os.environ.get("SPARK_GRAFT_KEEP_PLAN") == "1":
-        return out
-    if is_reduced_rooted(out):
-        out = checkpoint_reduced(out)
-        for c in caches:
-            if callable(c):
-                c()
-            else:
-                c.unpersist(blocking=False)
-    return out
-
-
-def materialize_input(df: DataFrame):
+def materialize_input(df: DataFrame) -> DataFrame:
     """Materialize a multi-consumer operator INPUT in the tier the
     plan proves safe: reduced-rooted frames localCheckpoint (eager,
     node-sized, lineage cut is fine); everything else DISK_ONLY
     persists — lineage retained, so at the 100 TB design point an
     executor loss recomputes blocks instead of killing the query.
-    The persist is lazy; the operator's first action builds it.
+    The persist is lazy; the operator's first action builds it. Both
+    tiers live until the query boundary (module docstring).
 
-    Returns ``(df, release)``. ``release()`` drops the persist-tier
-    cache once every consumer has been materialized (kmeans-style
-    session hygiene — see operators/kmeans.py); it is a NO-OP for the
-    checkpoint tier, whose blocks ARE the data (lineage severed —
-    unpersisting them would lose the frame, not just the cache)."""
-    # r16 (r15 ADVICE): a frame whose root IS an already-registered
-    # checkpoint leaf is already materialized — re-checkpointing it
-    # copied the same blocks once per chained operator call (rfm's
-    # per_user rollup was re-localCheckpointed by each of its three
-    # exact_ntile calls). Return it unchanged; release stays a no-op.
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        if (
-            plan.getClass().getSimpleName() == "LogicalRDD"
-            and _checkpoint_key(plan) in _REDUCED_CHECKPOINT_RDD_IDS
-        ):
-            return df, (lambda: None)
-    except Exception:
-        pass  # fall through to the normal tiers
-    if is_reduced_rooted(df):
-        return checkpoint_reduced(df), (lambda: None)
-    out = persist_fact_rows(df)
-    return out, (lambda: out.unpersist(blocking=False) and None)
+    A frame whose root IS a registered checkpoint leaf — the one
+    LogicalRDD root _node_reduced admits — is already materialized and
+    comes back unchanged: re-checkpointing copied the same blocks once
+    per chained operator call (rfm's per_user rollup feeds three
+    exact_ntile calls)."""
+    if not is_reduced_rooted(df):
+        return persist_fact_rows(df)
+    root = df._jdf.queryExecution().optimizedPlan()
+    if root.getClass().getSimpleName() == "LogicalRDD":
+        return df
+    return checkpoint_reduced(df)

@@ -45,10 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from hdsp_hive_release_src_spark.operators.materialize import (
-    defer_release,
-    materialize_input,
-)
+from hdsp_hive_release_src_spark.operators.materialize import materialize_input
 
 
 def with_global_rank(
@@ -58,7 +55,6 @@ def with_global_rank(
     descending: bool = False,
     n_ranges: int = 32,
     rank_col: str = "rank",
-    finalize=None,
 ) -> tuple[DataFrame, int]:
     """Return (df + exact 1-based global rank column, total row
     count) for the order (value_col [DESC], *tiebreak_cols ASC).
@@ -66,27 +62,14 @@ def with_global_rank(
     value_col resolved by the tiebreak columns (RANK/DENSE_RANK
     shared-rank semantics are NOT provided).
 
-    ``finalize``: optional ``(ranked: DataFrame, total: int) ->
-    DataFrame`` reduction the caller would apply to the ranked frame.
-    When given AND its result is provably reduced, the result is
-    eagerly localCheckpointed INSIDE the operator (reading the input
-    materialization once) and a persist-tier input cache is released
-    before returning — the kmeans-style no-session-leak shape at the
-    pinned single executed scan. A non-reduced finalize result is
-    returned lazily and the cache kept (the safe default). Without
-    ``finalize``, the ranked frame is returned lazily and a fact-tier
-    input cache release is DEFERRED to the next query-boundary flush
-    (materialize.defer_release — r16): the consumer's FIRST action
-    reads the same materialization the build collects read (single
-    executed scan; counts/offsets and output rows consistent even for
-    nondeterministic input lineage), then the harness flush drops the
-    cache, so nothing survives the query boundary. Contract: actions
-    taken AFTER the flush recompute the input from lineage — a
-    nondeterministic input (rand/sample/shuffle-order-sensitive
-    limit) can then disagree with the build's offsets (duplicate or
-    gapped ranks). Callers needing multi-flush reads of a
-    nondeterministic input must pass ``finalize`` (checkpointed — no
-    recompute window) or persist the input themselves."""
+    The ranked frame is returned lazily over the input
+    materialization, which lives to the query boundary
+    (operators/materialize.py): the consumer's action reads the same
+    materialization the build collects read — single executed scan,
+    counts/offsets and output rows consistent even for a
+    nondeterministic input lineage. An action after the boundary
+    recomputes a fact-tier input from lineage, where a
+    nondeterministic input can disagree with the build's offsets."""
     # r13 subtree-audit fix: the operator consumes its input THREE
     # times (the percentile collect, the per-range count collect, the
     # ranked output), and chained calls compound — three exact_ntile
@@ -96,7 +79,7 @@ def with_global_rank(
     # not trusted — reduced (aggregate-rooted) frames localCheckpoint,
     # fact-row projections (histogram_equi_depth, trimmed_mean) get
     # DISK_ONLY persist so lineage survives executor loss.
-    df, release = materialize_input(df)
+    df = materialize_input(df)
     fracs = [i / n_ranges for i in range(1, n_ranges)]
     brow = df.agg(
         F.percentile_approx(
@@ -144,26 +127,6 @@ def with_global_rank(
             + F.element_at(off_map, F.col("__rid"))
         ).cast("long"),
     ).drop("__rid")
-    if finalize is not None:
-        from hdsp_hive_release_src_spark.operators.materialize import (
-            checkpoint_reduced_and_release,
-        )
-
-        out = checkpoint_reduced_and_release(
-            finalize(ranked, total), release
-        )
-        return out, total
-    # r16 (r15 verdict item 5): the no-finalize path DEFERS the
-    # fact-tier input-cache release to the next query-boundary flush
-    # instead of dropping it at return (r15) or keeping it for the
-    # session (pre-r15). The consumer's collect reads the one
-    # materialization the build collects built — single executed scan
-    # (re-pinned at 1 in tests/test_scan_counts.py) and
-    # build/output consistency for free — and the harness flush
-    # (registry.py's query wrapper) unpersists right after.
-    # Checkpoint-tier inputs are unaffected (release is a no-op —
-    # the blocks ARE the data).
-    defer_release(release)
     return ranked, total
 
 
@@ -188,33 +151,15 @@ def exact_ntile(
     descending: bool = False,
     n_ranges: int = 32,
     bucket_col: str = "bucket",
-    finalize=None,
 ) -> DataFrame:
     """df + ``bucket_col`` holding exact SQL ``ntile(n_buckets) OVER
-    (ORDER BY value [DESC], tiebreaks)`` — without the global window.
-
-    ``finalize``: optional ``DataFrame -> DataFrame`` reduction over
-    the bucketed frame, forwarded to with_global_rank's cache-release
-    path (see its docstring)."""
-
-    def bucketed(ranked: DataFrame, total: int) -> DataFrame:
-        out = ranked.withColumn(
-            bucket_col, _ntile_bucket(total, n_buckets).cast("long")
-        ).drop("__rank")
-        return finalize(out) if finalize is not None else out
-
-    out, _total = with_global_rank(
-        df,
-        value_col,
-        tiebreak_cols,
-        descending,
-        n_ranges,
-        "__rank",
-        finalize=bucketed if finalize is not None else None,
+    (ORDER BY value [DESC], tiebreaks)`` — without the global window."""
+    ranked, total = with_global_rank(
+        df, value_col, tiebreak_cols, descending, n_ranges, "__rank"
     )
-    if finalize is not None:
-        return out
-    return bucketed(out, _total)
+    return ranked.withColumn(
+        bucket_col, _ntile_bucket(total, n_buckets).cast("long")
+    ).drop("__rank")
 
 
 def range_prefix_sum(
@@ -244,11 +189,8 @@ def range_prefix_sum(
     # same input-materialization discipline as with_global_rank: the
     # boundary collect, the partial-sum collect and the output each
     # consume df; tier chosen from the plan (reduced → localCheckpoint,
-    # fact rows → DISK_ONLY persist). Every current caller passes a
-    # reduced frame (release is then a no-op), but the fact tier gets
-    # the same deferred release as with_global_rank's no-finalize
-    # path (r16) — no cache survives the query boundary either way.
-    df, release = materialize_input(df)
+    # fact rows → DISK_ONLY persist), released at the query boundary.
+    df = materialize_input(df)
     fracs = [i / n_ranges for i in range(1, n_ranges)]
     brow = df.agg(
         F.percentile_approx(
@@ -293,8 +235,4 @@ def range_prefix_sum(
             prefix + c,
             F.sum(c).over(w) + F.element_at(off_map, F.col("__rid")),
         )
-    # r16: same deferred-release contract as with_global_rank's
-    # no-finalize path (no-op for the checkpoint tier every current
-    # caller takes) — see that path's comment for the lifecycle
-    defer_release(release)
     return out.drop("__rid")

@@ -13,10 +13,7 @@ from pyspark.sql import functions as F
 
 from hdsp_hive_release_src_spark.catalog import Catalog
 from hdsp_hive_release_src_spark.operators.asof import asof_join
-from hdsp_hive_release_src_spark.operators.materialize import (
-    checkpoint_reduced_and_release,
-    persist_fact_rows,
-)
+from hdsp_hive_release_src_spark.operators.materialize import persist_fact_rows
 from hdsp_hive_release_src_spark.operators.sessionize import sessionize
 from hdsp_hive_release_src_spark.registry import query
 
@@ -181,25 +178,14 @@ def asof_join_events_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tier); each side is a cache read. The output is row-per-purchase
     # (NOT reduced) and the cache is built BY the consumer's action
     # (no build-time collects) — so releasing at return would restore
-    # the two-scan plan, and keeping it was (through r15) the one
-    # registry-wide documented retention. r16: the deferred-release
-    # boundary (operators/materialize.defer_release, flushed by the
-    # registry's query wrapper at the next call) closes it — the
-    # consumer's collect builds the cache and reads it from both
-    # sides, then the boundary flush unpersists. Zero documented
-    # retentions remain (tools/run_gates.py flags every retained
-    # cache; tests/test_materialize_tier.py pins the lifecycle).
-    from hdsp_hive_release_src_spark.operators.materialize import (
-        defer_release,
-        persist_fact_rows,
-    )
-
+    # the two-scan plan. The consumer's collect builds the cache and
+    # reads it from both sides; the query boundary releases it
+    # (operators/materialize.py lifecycle).
     both = persist_fact_rows(
         ev.where(F.col("event_type").isin("purchase", "view")).select(
             "user_id", "event_id", "ts", "event_type"
         )
     )
-    defer_release(lambda: both.unpersist(blocking=False))
     purchases = both.where(F.col("event_type") == "purchase").select(
         "user_id", "event_id", "ts"
     )
@@ -790,17 +776,14 @@ def funnel_windowed_strict(
         .groupBy("user_id")
         .agg(F.min("ts").alias("s3"))
     )
-    # r14 hygiene: the 1-row funnel summary is checkpointed off the
-    # cache and the events-row persist released — no session cache
-    return checkpoint_reduced_and_release(
+    return (
         v.agg(F.count(F.lit(1)).alias("n_viewed"))
         .join(F.broadcast(c.agg(F.count(F.lit(1)).alias("n_clicked_1h"))))
         .join(
             F.broadcast(
                 p.agg(F.count(F.lit(1)).alias("n_purchased_1h"))
             )
-        ),
-        base,
+        )
     )
 
 

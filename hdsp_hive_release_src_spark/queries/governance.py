@@ -11,10 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hdsp_hive_release_src_spark.catalog import ORDER_CENTS, Catalog
-from hdsp_hive_release_src_spark.operators.materialize import (
-    checkpoint_reduced_and_release,
-    persist_fact_rows,
-)
+from hdsp_hive_release_src_spark.operators.materialize import persist_fact_rows
 from hdsp_hive_release_src_spark.registry import query
 
 
@@ -469,9 +466,7 @@ def table_diff_reconcile(
         "c1",
         "c2",
     )
-    # r14 hygiene: the 4-row diff summary is checkpointed off the
-    # cache and the orders-row persist released — no session cache
-    return checkpoint_reduced_and_release(
+    return (
         j.groupBy("status")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
@@ -484,8 +479,7 @@ def table_diff_reconcile(
             .cast("long")
             .alias("abs_drift_cents"),
         )
-        .orderBy("status"),
-        base,
+        .orderBy("status")
     )
 
 

@@ -12,10 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hdsp_hive_release_src_spark.catalog import ORDER_CENTS, Catalog
-from hdsp_hive_release_src_spark.operators.materialize import (
-    checkpoint_reduced_and_release,
-    persist_fact_rows,
-)
+from hdsp_hive_release_src_spark.operators.materialize import persist_fact_rows
 from hdsp_hive_release_src_spark.operators.ranking import range_prefix_sum
 from hdsp_hive_release_src_spark.registry import query
 from hdsp_hive_release_src_spark.sources.io import fresh_managed_table
@@ -1089,27 +1086,21 @@ def histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hdsp_hive_release_src_spark.operators.ranking import exact_ntile
 
     o = Catalog(spark, sf_dir).orders
-    # the 10-row rollup runs as exact_ntile's finalize so the operator
-    # can release its fact-row DISK_ONLY input cache before returning
-    # (kmeans-style hygiene, r14) at the pinned 1 executed orders scan
-    return exact_ntile(
-        o.select("o_totalprice", "o_orderkey"),
-        "o_totalprice",
-        ["o_orderkey"],
-        n_buckets=10,
-        finalize=lambda b: (
-            b.select(
-                "o_totalprice",
-                F.col("bucket").cast("int").alias("bucket"),
-            )
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.round(F.min("o_totalprice"), 2).alias("lo"),
-                F.round(F.max("o_totalprice"), 2).alias("hi"),
-            )
-            .orderBy("bucket")
-        ),
+    return (
+        exact_ntile(
+            o.select("o_totalprice", "o_orderkey"),
+            "o_totalprice",
+            ["o_orderkey"],
+            n_buckets=10,
+        )
+        .select("o_totalprice", F.col("bucket").cast("int").alias("bucket"))
+        .groupBy("bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(F.min("o_totalprice"), 2).alias("lo"),
+            F.round(F.max("o_totalprice"), 2).alias("hi"),
+        )
+        .orderBy("bucket")
     )
 
 
@@ -2227,9 +2218,7 @@ def cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rev_cents",
         F.sum("rev_cents").over(w).cast("long").alias("cum_cents"),
     )
-    # r14 hygiene: the week-grain matrix is checkpointed off the cache
-    # and the events-row persist released — no session-lifetime cache
-    return checkpoint_reduced_and_release(
+    return (
         c.join(cs, "cw")
         .select(
             F.expr("date_add(date '1970-01-01', cast(cw * 7 as int))")
@@ -2241,8 +2230,7 @@ def cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("ltv_cents_per_user"),
         )
-        .orderBy("cohort_week_start", "week_offset"),
-        rev,
+        .orderBy("cohort_week_start", "week_offset")
     )
 
 

@@ -11,10 +11,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hdsp_hive_release_src_spark.catalog import ORDER_CENTS, Catalog
-from hdsp_hive_release_src_spark.operators.materialize import (
-    checkpoint_reduced_and_release,
-    persist_fact_rows,
-)
+from hdsp_hive_release_src_spark.operators.materialize import persist_fact_rows
 from hdsp_hive_release_src_spark.operators.ranking import with_global_rank
 from hdsp_hive_release_src_spark.registry import query
 
@@ -300,9 +297,7 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     mad = dev.groupBy("event_type").agg(
         F.median("adev").alias("mad")
     )
-    # r14 hygiene: the per-type result is checkpointed off the cache
-    # and the events-row persist released — no session-lifetime cache
-    return checkpoint_reduced_and_release(
+    return (
         dev.join(F.broadcast(mad), "event_type")
         .groupBy("event_type")
         .agg(
@@ -314,8 +309,7 @@ def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_outliers"),
         )
-        .orderBy("event_type"),
-        dev,
+        .orderBy("event_type")
     )
 
 
@@ -437,35 +431,25 @@ def trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     o = Catalog(spark, sf_dir).orders
-
-    # the 1-row trim aggregate runs as the operator's finalize so the
-    # fact-row DISK_ONLY input cache is released before returning
-    # (kmeans-style hygiene, r14) at the pinned 1 executed orders scan
-    def trim(ranked: DataFrame, total: int) -> DataFrame:
-        cut = total // 20
-        mid = ranked.where(
-            (F.col("rnk") > cut) & (F.col("rnk") <= total - cut)
-        ).select(
-            F.round(F.col("o_totalprice") * 100)
-            .cast("long")
-            .alias("cents")
-        )
-        return mid.agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.sum("cents").cast("long").alias("cents_sum"),
-            F.round(
-                F.sum("cents") / 100.0 / F.count(F.lit(1)), 4
-            ).alias("trimmed_mean"),
-        )
-
-    out, _total = with_global_rank(
+    ranked, total = with_global_rank(
         o.select("o_orderkey", "o_totalprice"),
         "o_totalprice",
         ["o_orderkey"],
         rank_col="rnk",
-        finalize=trim,
     )
-    return out
+    cut = total // 20
+    mid = ranked.where(
+        (F.col("rnk") > cut) & (F.col("rnk") <= total - cut)
+    ).select(
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents")
+    )
+    return mid.agg(
+        F.count(F.lit(1)).alias("n_kept"),
+        F.sum("cents").cast("long").alias("cents_sum"),
+        F.round(F.sum("cents") / 100.0 / F.count(F.lit(1)), 4).alias(
+            "trimmed_mean"
+        ),
+    )
 
 
 # --------------------------------------------------------------------

@@ -14,10 +14,7 @@ from pyspark.sql import functions as F
 
 from hdsp_hive_release_src_spark.catalog import ORDER_CENTS, Catalog
 from hdsp_hive_release_src_spark.functions.hashing import CMS_P
-from hdsp_hive_release_src_spark.operators.materialize import (
-    checkpoint_reduced_and_release,
-    persist_fact_rows,
-)
+from hdsp_hive_release_src_spark.operators.materialize import persist_fact_rows
 from hdsp_hive_release_src_spark.operators.ranking import range_prefix_sum
 from hdsp_hive_release_src_spark.registry import query
 
@@ -1527,14 +1524,10 @@ def conformal_prediction_interval(
             F.max("q_hat").cast("long").alias("q_hat_cents"),
         )
     )
-    # r14 hygiene: the 1-row result is checkpointed off the cache and
-    # the orders-row persist released — no session-lifetime cache,
-    # executed scans unchanged
-    return checkpoint_reduced_and_release(
+    return (
         nq.select("n_cal")
         .crossJoin(F.broadcast(cov))
-        .select("n_cal", "n_test", "q_hat_cents", "coverage_permille"),
-        s,
+        .select("n_cal", "n_test", "q_hat_cents", "coverage_permille")
     )
 
 

@@ -17,10 +17,7 @@ from hdsp_hive_release_src_spark.functions.text import (
     sql_in_list,
 )
 from hdsp_hive_release_src_spark.operators.jaccard import parallel_docs
-from hdsp_hive_release_src_spark.operators.materialize import (
-    checkpoint_reduced_and_release,
-    persist_fact_rows,
-)
+from hdsp_hive_release_src_spark.operators.materialize import persist_fact_rows
 from hdsp_hive_release_src_spark.operators.sketches import heavy_hitters
 from hdsp_hive_release_src_spark.registry import query
 
@@ -1057,9 +1054,7 @@ def rake_keyword_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("score_milli").cast("long").alias("score_milli"),
         )
     )
-    # r14 hygiene: the top-N result is checkpointed off the cache and
-    # the token-row persist released — no session-lifetime cache
-    return checkpoint_reduced_and_release(
+    return (
         occ.groupBy("phrase", "phrase_len")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_occurrences"),
@@ -1067,8 +1062,7 @@ def rake_keyword_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("phrase", "phrase_len", "n_occurrences", "score_milli")
         .orderBy(F.desc("score_milli"), "phrase")
-        .limit(RAKE_TOP),
-        pw,
+        .limit(RAKE_TOP)
     )
 
 

@@ -492,19 +492,11 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = Catalog(spark, sf_dir).embeddings.select(
         "vec_id", to_double("embedding").alias("v")
     )
-    # the per-cluster rollup runs as kmeans' finalize so the operator
-    # can release its corpus-sized DISK_ONLY cache before returning
-    # (r13 advice: no session-lifetime persist leak) while keeping the
-    # pinned single executed embeddings scan
-    return kmeans(
-        e,
-        id_col="vec_id",
-        vec_col="v",
-        finalize=lambda a: (
-            a.groupBy("cluster")
-            .agg(F.count(F.lit(1)).alias("n_members"))
-            .orderBy("cluster")
-        ),
+    return (
+        kmeans(e, id_col="vec_id", vec_col="v")
+        .groupBy("cluster")
+        .agg(F.count(F.lit(1)).alias("n_members"))
+        .orderBy("cluster")
     )
 
 
@@ -682,8 +674,8 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     r17 (guide §5/§6, r16 verdict item 3): the materializations are
     ``localCheckpoint`` (reduced tiers: grp and assigned are
     Aggregate-rooted distinct-vector tables) and a DISK_ONLY persist
-    with a query-boundary ``defer_release`` (members — fact-row
-    count, one row per corpus vector), replacing three scratch
+    (members — fact-row count, one row per corpus vector), all
+    released at the query boundary, replacing three scratch
     PARQUET write+read roundtrips per call. The parquet scaffolding
     cost 3 write jobs + 3 read-back scans of real file I/O on every
     invocation — a fixed per-job cost locally, real distributed-FS
@@ -696,7 +688,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.200/2.464/2.480 s (~25%), identical 93,800 rows every shot."""
     from hdsp_hive_release_src_spark.operators.materialize import (
         checkpoint_reduced,
-        defer_release,
         persist_fact_rows,
     )
 
@@ -721,7 +712,6 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     members = persist_fact_rows(
         e.join(grp, "v").select("rep", "vec_id")
     )
-    defer_release(lambda: members.unpersist(blocking=False))
     n = grp.select(
         F.col("rep").alias("vec_id"),
         "v",

@@ -29,13 +29,20 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     the driver then records a weaker rows-only check.
 
     The REGISTERED callable (what the driver/bench/sweeps invoke via
-    ``QUERIES[name]``) is a thin wrapper that first flushes any cache
-    releases the PREVIOUS query deferred to its boundary
-    (operators/materialize.defer_release — r16): every harness runs
-    queries sequentially (call → collect → call next), so flushing at
-    call time releases each query's deferred caches right after its
-    consumer's collect. The raw function is returned unwrapped for
-    direct imports (tests composing query bodies).
+    ``QUERIES[name]``) is a thin wrapper that first runs the query
+    boundary (operators/materialize.flush_pending_releases): it
+    releases every cache and checkpoint the session holds — everything
+    the PREVIOUS call made, and anything else cached in the session.
+    That is the only release point. The contract:
+    every harness runs call → collect → call next, so the boundary
+    falls after the previous consumer's action. Its failure mode: a
+    frame acted on after the next registered call fails loudly
+    ("Checkpoint block not found") when its plan reads a checkpoint,
+    and silently recomputes a released persist. Never build query B
+    before collecting query A; concurrent queries in one session need
+    a per-invocation scope this wrapper does not provide. The raw
+    function is returned unwrapped for direct imports (tests composing
+    query bodies).
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -80,52 +87,27 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 # tools/gen_certification.py after the driver lands the previous
 # round's CORRECTNESS file.
 
-# round 17: registry still frozen at 494. Two re-plans this round
-# (optimization round 2 of 2), both values-identical and oracle
-# re-proven, re-certify first per the standing plan-or-operator-
-# changed policy:
-#   * the shared shingle pair-generation core (operators/jaccard.py
-#     shingle_pair_counts) now groups the pair aggregation on
-#     (d1, d2) alone — per-doc sizes ride as max() aggregates (n is
-#     functionally dependent on the doc id) — and
-#     dedup_ngram_jaccard additionally passes min_jaccard=0.5, an
-#     exact-safe size filter (min(n1,n2) ≥ 0.5·max ⟸ J ≥ 0.5) that
-#     drops ~24% of candidate incidences before the aggregation.
-#     All six consumers of the core re-certify.
-#   * semantic_dedup's three scratch-parquet materializations
-#     (group / assignment / membership tables) are now
-#     localCheckpoint / DISK_ONLY-persist-with-deferred-release
-#     (queries/vectors.py docstring) — same single-build lifecycle, no file
-#     I/O, 2 executed corpus scans unchanged.
-# The remaining slots continue the staleness drain (oldest
-# last-certified rounds first, from the regenerated certification).
+# The registry is frozen at 494. One cache-lifecycle change re-plans
+# nine queries, which re-certify first per the standing
+# plan-or-operator-changed policy: their results used to be eagerly
+# localCheckpointed before return (six through the retired
+# checkpoint-and-release helper, three through the operators' retired
+# finalize hooks), so each returned plan was a checkpoint leaf. Each
+# now returns its frame lazily and the query boundary releases the
+# caches (operators/materialize.py), so the returned plan is the
+# inner plan. Values are unchanged. The remaining slots continue the
+# staleness drain (oldest last-certified rounds first, from the
+# regenerated certification).
 _CHANGED_THIS_ROUND: tuple[str, ...] = (
-    "dedup_ngram_jaccard",
-    "dedup_containment",
-    "incremental_dedup_minhash",
-    "cross_source_dedup_matrix",
-    "dedup_threshold_sweep",
-    "minhash_estimate_accuracy",
-    "semantic_dedup",
-    # (pagerank_trade_graph was audited this round — its per-round
-    # contrib exchanges were re-planned as a co-partitioned persist,
-    # MEASURED flat-to-worse at replica scale, and the r16 checkpoint
-    # shape kept: graph.py comment. Final plan unchanged from r16, so
-    # it does not re-certify.)
-    # r17 (verdict item 8): both MV rollups rounded the DOUBLE image
-    # of an exact decimal revenue sum — the q9 half-boundary class,
-    # caught by the audit's new float-image scan; engine and oracle
-    # now round the exact decimal before the cast, in lockstep
-    # (queries/olap.py). sf0.01 values unchanged (verified); plan
-    # changed, so they re-certify.
-    "mv_auto_rewrite",
-    "materialized_view_rewrite",
-    # transitive consumers of the reshaped jaccard pair core
-    # (_jaccard_pairs_exact → shingle_pair_counts): their plans carry
-    # the new 2-key aggregation + size filter, so they re-certify.
-    "dedup_components",
-    "dedup_keep_best",
-    "quality_filter_pipeline",
+    "rake_keyword_phrases",
+    "conformal_prediction_interval",
+    "mad_outliers",
+    "funnel_windowed_strict",
+    "table_diff_reconcile",
+    "cohort_ltv_matrix",
+    "trimmed_mean",
+    "histogram_equi_depth",
+    "kmeans_clusters",
 )
 
 # Empty as of r11: every registered query now has a driver correctness

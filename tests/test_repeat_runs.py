@@ -2,7 +2,12 @@
 re-runnable in the same session with an identical result — stale
 file-status caches, leftover temp views, or un-dropped tables are
 exactly the failure class that silently zeroed csv_permissive_parse's
-corrupt count (sources.py: the refreshByPath fix)."""
+corrupt count (sources.py: the refreshByPath fix).
+
+The same holds for queries that localCheckpoint: the second call's
+query boundary releases every checkpoint the first call made, so a
+release that reached a live frame shows up here as an error or a
+mismatch."""
 
 from __future__ import annotations
 
@@ -34,13 +39,20 @@ WRITING_QUERIES = [
     "metadata_columns",
 ]
 
+CHECKPOINTING_QUERIES = [
+    "dedup_components",
+    "semantic_dedup",
+    "pagerank_trade_graph",
+    "heavy_hitters_topk",
+]
+
 
 @pytest.fixture(scope="module", autouse=True)
 def _load():
     registry.load_all()
 
 
-@pytest.mark.parametrize("name", WRITING_QUERIES)
+@pytest.mark.parametrize("name", WRITING_QUERIES + CHECKPOINTING_QUERIES)
 def test_second_run_matches_first(spark, name):
     fn = registry.QUERIES[name]
     first = sorted(map(tuple, fn(spark, SF).collect()))

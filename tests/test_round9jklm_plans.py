@@ -47,10 +47,7 @@ def test_calibration_scan_prunes_columns(spark):
     assert "o_comment" not in scan and "o_totalprice" not in scan
 
 
-def test_cohort_ltv_window_is_partitioned_by_cohort(spark, monkeypatch):
-    # r14: the query's final plan is a checkpoint leaf (cache-release
-    # hygiene); the bypass exposes the inner plan under test
-    monkeypatch.setenv("SPARK_GRAFT_KEEP_PLAN", "1")
+def test_cohort_ltv_window_is_partitioned_by_cohort(spark):
     plan = _plan(registry.QUERIES["cohort_ltv_matrix"](spark, SF))
     window_lines = [
         ln for ln in plan.splitlines() if "Window [" in ln
@@ -97,10 +94,9 @@ def test_km_survival_broadcasts_corpus_end(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_rake_windows_are_doc_partitioned(spark, monkeypatch):
+def test_rake_windows_are_doc_partitioned(spark):
     """Islands and phrase-length windows must partition by doc (and
     doc, grp) — never a global token window."""
-    monkeypatch.setenv("SPARK_GRAFT_KEEP_PLAN", "1")
     plan = _plan(registry.QUERIES["rake_keyword_phrases"](spark, SF))
     window_lines = [
         ln for ln in plan.splitlines() if "Window [" in ln

@@ -257,16 +257,13 @@ def test_cache_table_serves_from_memory(spark):
     spark.sql("UNCACHE TABLE IF EXISTS cache_orders_agg")
 
 
-def test_exact_ntile_has_no_global_window(spark, monkeypatch):
+def test_exact_ntile_has_no_global_window(spark):
     """window_ntile and histogram_equi_depth must never plan a
     no-partition WindowExec (single-task sort of the whole table);
     every Window node must carry a partition spec."""
     from hdsp_hive_release_src_spark import registry
     from hdsp_hive_release_src_spark.plans import explain_str
 
-    # r14: histogram_equi_depth's final plan is a checkpoint leaf
-    # (cache-release hygiene); the bypass exposes the ranked plan
-    monkeypatch.setenv("SPARK_GRAFT_KEEP_PLAN", "1")
     registry.load_all()
     for name in ("window_ntile", "histogram_equi_depth"):
         df = registry.QUERIES[name](spark, "/root/testdata/sf0.001")

@@ -234,15 +234,9 @@ PERSISTED_FACT_ROWS = {
 
 
 @pytest.mark.parametrize("name", sorted(PERSISTED_FACT_ROWS))
-def test_persisted_fact_plan_shows_single_build_scan(
-    spark, name, monkeypatch
-):
+def test_persisted_fact_plan_shows_single_build_scan(spark, name):
     from hdsp_hive_release_src_spark import registry
 
-    # r14: these queries' final plans are checkpoint leaves
-    # (checkpoint_reduced_and_release); the bypass exposes the inner
-    # plan whose single cache-build scan this test pins
-    monkeypatch.setenv("SPARK_GRAFT_KEEP_PLAN", "1")
     registry.load_all()
     table, expected = PERSISTED_FACT_ROWS[name]
     spark.catalog.clearCache()
@@ -464,12 +458,9 @@ RUNTIME_SCANS = {
     # user-grain rollup.
     "rfm_segmentation": {"events": 1},
     "histogram_equi_depth": {"orders": 1},
-    # r16: the two no-finalize ranking callers (row-per-input output)
-    # are back to ONE executed scan — the input cache release is
-    # DEFERRED to the query-boundary flush (r15 verdict item 5), so
-    # the consumer's collect reads the build's materialization instead
-    # of recomputing the pruned scan (the r15 trade), and the flush
-    # drops the cache right after. Zero session retention either way.
+    # the ranking callers are ONE executed scan: the input cache lives
+    # to the query boundary, so the consumer's collect reads the
+    # build's materialization instead of recomputing the pruned scan.
     "window_ntile": {"customer": 1},
     "gini_concentration_index": {"orders": 1},
     "quantile_normalize": {"orders": 1},

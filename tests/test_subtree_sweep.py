@@ -57,29 +57,14 @@ def test_no_repeated_expensive_subtrees(spark, sf_dir, name):
     )
 
 
-def test_tool_import_does_not_mutate_keep_plan_env(spark, sf_dir):
-    """r15 regression pin: the gate runner sets SPARK_GRAFT_KEEP_PLAN
-    only for its plan pass, NEVER at import, and restores it after —
-    this test module imports run_gates at collection time, and a leaked
-    bypass would silently skip the checkpoint discipline for the
-    entire test process (caught as a full-suite failure of the ranking
-    cache-release pins in r15)."""
-    import importlib
-    import os
-
-    saved = os.environ.pop(run_gates.KEEP_PLAN, None)
-    try:
-        importlib.reload(run_gates)
-        assert run_gates.KEEP_PLAN not in os.environ
-        run_gates.plan_pass(spark, sf_dir, ["q6_revenue_forecast"])
-        assert run_gates.KEEP_PLAN not in os.environ
-        os.environ[run_gates.KEEP_PLAN] = "0"
-        run_gates.plan_pass(spark, sf_dir, ["q6_revenue_forecast"])
-        assert os.environ[run_gates.KEEP_PLAN] == "0"
-    finally:
-        os.environ.pop(run_gates.KEEP_PLAN, None)
-        if saved is not None:
-            os.environ[run_gates.KEEP_PLAN] = saved
+def test_plan_pass_ends_at_a_boundary(spark, sf_dir):
+    """The gate's plan pass builds queries without running them, and
+    building runs their eager checkpoints; the pass must end at a
+    query boundary so the execution pass starts with no persistent
+    RDD at any storage level (pagerank_trade_graph localCheckpoints
+    every round)."""
+    run_gates.plan_pass(spark, sf_dir, ["pagerank_trade_graph"])
+    assert run_gates.retained_rdd_count(spark) == 0
 
 
 def test_cache_read_repeats_are_opaque_but_joins_above_still_flag():

@@ -1,10 +1,7 @@
 """Standing gates: one process, one Spark session, one registry walk.
 
-1. Plan pass (sf0.001): each query is built and explained ONCE under
-   SPARK_GRAFT_KEEP_PLAN=1, set for this pass only — without it
-   checkpoint_reduced_and_release roots ~10 plans at a LogicalRDD leaf
-   (hiding their inner joins, scans and subtrees) and eagerly EXECUTES
-   them just to explain them. The text lands in
+1. Plan pass (sf0.001): each query is built and explained ONCE. The
+   text lands in
    _scratch/gate_plans/<name>.txt (diff two dumps for before/after plan
    evidence) and three predicates read it:
    - scan: >=3 fact-table ``Location`` leaves; the flagged set must
@@ -20,8 +17,9 @@
    from a cold cache. Executed scans per table (plans/runtime.py:
    build-time jobs included, cache hits excluded) flag at >=3 beyond
    KNOWN_LEGITIMATE — the audit that caught rfm_segmentation's 14
-   build-time events scans — and a DISK_ONLY persist surviving the
-   query boundary is a session leak.
+   build-time events scans — and a persistent RDD of any storage
+   level (persist or localCheckpoint) surviving the query boundary is
+   a session leak.
 3. Rounding (sf0.01): tools/audit_rounding.audit over every query.
 4. Parity (sf0.1): tools/check_oracle.check at 10x the driver-gated
    scale, where sf0.01 is blind to cross-engine half-boundary rounding
@@ -38,7 +36,6 @@ every gate's details; exit 0 iff every gate that ran passed.
 from __future__ import annotations
 
 import json
-import os
 import re
 import sys
 import time
@@ -48,7 +45,6 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-KEEP_PLAN = "SPARK_GRAFT_KEEP_PLAN"
 PLAN_DIR = REPO / "_scratch" / "gate_plans"
 SF_SMALL = "/root/testdata/sf0.001"
 SF_ROUNDING = "/root/testdata/sf0.01"
@@ -278,8 +274,8 @@ def bnlj_hits(plan: str) -> tuple[list[str], int]:
 
 
 def plan_pass(spark, sf: str, names: list[str]) -> dict[str, dict]:
-    """Explain each query once under the KEEP_PLAN bypass (restored
-    afterwards) and apply the scan, subtree and bnlj predicates."""
+    """Explain each query once and apply the scan, subtree and bnlj
+    predicates."""
     from hdsp_hive_release_src_spark import registry
     from hdsp_hive_release_src_spark.operators.materialize import (
         flush_pending_releases,
@@ -294,46 +290,38 @@ def plan_pass(spark, sf: str, names: list[str]) -> dict[str, dict]:
     benign: dict[str, str] = {}
     actionable: dict[str, list[str]] = {}
     n_scalar = 0
-    saved = os.environ.get(KEEP_PLAN)
-    os.environ[KEEP_PLAN] = "1"
-    try:
-        for name in names:
-            out = PLAN_DIR / f"{name}.txt"
-            try:
-                plan = explain_str(registry.QUERIES[name](spark, sf))
-            except Exception as ex:  # streaming/ddl queries may not plan
-                unplannable[name] = type(ex).__name__
-                subtree[name] = {"status": "unplannable",
-                                 "reason": type(ex).__name__}
-                out.write_text(f"UNPLANNABLE: {type(ex).__name__}: {ex}\n")
-                continue
-            out.write_text(plan + "\n")
-            if hot := scan_hits(plan):
-                scan[name] = hot
-            hits = subtree_hits(plan)
-            if hits is None:
-                subtree[name] = {"status": "unplannable", "reason": "no tree"}
-            elif name in EXEMPT:
-                subtree[name] = {"status": "exempt", "reason": EXEMPT[name],
-                                 "subtrees": hits}
-            elif hits:
-                subtree[name] = {"status": "flagged", "subtrees": hits}
-            else:
-                subtree[name] = {"status": "clean"}
-            conditioned, scalar = bnlj_hits(plan)
-            n_scalar += 1 if scalar else 0
-            if conditioned and name in KNOWN_BENIGN:
-                benign[name] = KNOWN_BENIGN[name]
-            elif conditioned:
-                actionable[name] = conditioned
-    finally:
-        if saved is None:
-            os.environ.pop(KEEP_PLAN, None)
+    for name in names:
+        out = PLAN_DIR / f"{name}.txt"
+        try:
+            plan = explain_str(registry.QUERIES[name](spark, sf))
+        except Exception as ex:  # streaming/ddl queries may not plan
+            unplannable[name] = type(ex).__name__
+            subtree[name] = {"status": "unplannable",
+                             "reason": type(ex).__name__}
+            out.write_text(f"UNPLANNABLE: {type(ex).__name__}: {ex}\n")
+            continue
+        out.write_text(plan + "\n")
+        if hot := scan_hits(plan):
+            scan[name] = hot
+        hits = subtree_hits(plan)
+        if hits is None:
+            subtree[name] = {"status": "unplannable", "reason": "no tree"}
+        elif name in EXEMPT:
+            subtree[name] = {"status": "exempt", "reason": EXEMPT[name],
+                             "subtrees": hits}
+        elif hits:
+            subtree[name] = {"status": "flagged", "subtrees": hits}
         else:
-            os.environ[KEEP_PLAN] = saved
-        # the execution pass starts without the plan pass's caches
-        flush_pending_releases()
-        spark.catalog.clearCache()
+            subtree[name] = {"status": "clean"}
+        conditioned, scalar = bnlj_hits(plan)
+        n_scalar += 1 if scalar else 0
+        if conditioned and name in KNOWN_BENIGN:
+            benign[name] = KNOWN_BENIGN[name]
+        elif conditioned:
+            actionable[name] = conditioned
+    # the last query's boundary: the execution pass starts without the
+    # plan pass's caches and checkpoints
+    flush_pending_releases()
     new = sorted(set(scan) - KNOWN_SCAN_FLAGGED)
     gone = sorted(KNOWN_SCAN_FLAGGED - set(scan))
     flagged = sorted(n for n, e in subtree.items() if e["status"] == "flagged")
@@ -349,20 +337,15 @@ def plan_pass(spark, sf: str, names: list[str]) -> dict[str, dict]:
     }
 
 
-def _disk_only_rdd_count(spark) -> int:
-    """Session-retained DISK_ONLY persists (the leak class; reduced-
-    tier localCheckpoints legitimately register MEMORY_AND_DISK)."""
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().values().iterator()
-    n = 0
-    while it.hasNext():
-        lvl = it.next().getStorageLevel()
-        n += lvl.useDisk() and not lvl.useMemory() and not lvl.useOffHeap()
-    return n
+def retained_rdd_count(spark) -> int:
+    """Persistent RDDs the session holds, at every storage level: a
+    DISK_ONLY persist and a MEMORY_AND_DISK localCheckpoint alike."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
 def execution_pass(spark, sf: str, names: list[str]) -> dict:
     """Run each query to completion from a cold cache; count executed
-    scans per table and DISK_ONLY persists surviving the query."""
+    scans per table and persistent RDDs surviving the query boundary."""
     from hdsp_hive_release_src_spark import registry
     from hdsp_hive_release_src_spark.operators.materialize import (
         flush_pending_releases,
@@ -377,8 +360,8 @@ def execution_pass(spark, sf: str, names: list[str]) -> dict:
     errors: dict[str, str] = {}
     retained_actionable: dict[str, int] = {}
     for name in names:
-        spark.catalog.clearCache()
-        cache_before = _disk_only_rdd_count(spark)
+        # the registry wrapper's boundary releases the previous
+        # query's caches before this one builds: a cold cache
         before = snapshot_executions(spark)
         try:
             registry.QUERIES[name](spark, sf).collect()
@@ -386,13 +369,12 @@ def execution_pass(spark, sf: str, names: list[str]) -> dict:
             errors[name] = f"{type(ex).__name__}: {ex}"[:120]
             continue
         spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-        # the harness boundary: the driver and the bench release
-        # deferred caches (operators/materialize.defer_release) when
-        # they call the NEXT query; flushing here measures what
-        # survives a completed query lifecycle. No retention is
-        # documented since r16, so every survivor is actionable.
+        # the harness boundary: the driver and the bench run it when
+        # they call the NEXT query; running it here measures what
+        # survives a completed query lifecycle. Every survivor is
+        # actionable.
         flush_pending_releases()
-        if (retained := _disk_only_rdd_count(spark) - cache_before) > 0:
+        if (retained := retained_rdd_count(spark)) > 0:
             retained_actionable[name] = retained
         counts = {t: executed_scans(spark, before, t) for t in RUNTIME_TABLES}
         if not (hot := {t: c for t, c in counts.items() if c >= 3}):
